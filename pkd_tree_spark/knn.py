@@ -93,7 +93,6 @@ __all__ = ["auto_knn_level", "knn", "knn_join"]
 # ~0.5GB; the same rows at d=2 are ~100MB — one row-count constant cannot
 # serve both). cells rows are 2 longs; qside rows are (d+1) longs + level/r.
 BROADCAST_BYTES = 128 << 20
-HIST_SAMPLE_ROWS = 2_000_000
 # a round whose offset mesh (2r+1)^d exceeds this switches to an exhaustive
 # filtered scan (see module docstring); 2^18 cells * 8B = 2MB per query mesh
 MESH_CAP_LOG2 = 18.0

@@ -4,8 +4,9 @@
               fixed-point-quantized vectors: the correctness baseline,
               broadcast queries x full scan, deterministic tie-break.
   ann_lsh   — random-hyperplane LSH buckets (deterministic +/-1 planes),
-              candidates = bucket equi-join (multi-probe over all tables),
-              exact re-rank inside buckets: the scale path. Approximate by
+              candidates = the buckets the broadcast queries probe (multi-
+              probe over all tables), exact re-rank inside each bucket
+              map-side, no corpus shuffle: the scale path. Approximate by
               construction -> no SQL oracle; recall is pytest-checked.
 """
 
@@ -124,42 +125,128 @@ def auto_planes(n_corpus: int) -> int:
     return max(6, math.ceil(math.log2(max(2.0, n_corpus / LSH_BUCKET_TARGET_ROWS))))
 
 
+def _data_aug(norm2: np.ndarray, m2: int) -> np.ndarray:
+    """MIPS augmentation of DATA rows: floor(sqrt(m2 - norm2)); float64
+    sqrt matches F.floor(F.sqrt(...)) IEEE-exactly."""
+    return np.floor(np.sqrt(np.maximum(0.0, float(m2) - norm2.astype(np.float64)))).astype(np.int64)
+
+
+def _table_keys_np(V: np.ndarray, aug: np.ndarray, n_planes: int, n_tables: int) -> np.ndarray:
+    """(rows, n_tables) int64 bucket keys of the int64 vectors ``V`` with
+    augmentation column ``aug``: ALL tables in ONE integer matmul against
+    the ±1 plane matrix. Bit-identical to ``lsh_bucket_col`` per table (same
+    sign rule ((i*A1 + pg*A2) >> 7) % 2, same >=0 bit test, exact int64
+    sums), but one (rows × d+1) @ (d+1 × 48) GEMM replaces
+    n_tables*n_planes higher-order array aggregates per row — the per-row
+    expression cost made the r3 corpus pass 18.7s at sf0.1. The table id
+    sits above the plane bits, so keys of different tables never collide."""
+    Va = np.concatenate([V, aug[:, None]], axis=1)  # (rows, d+1)
+    idx = np.arange(Va.shape[1], dtype=np.int64)
+    pg = np.arange(n_planes * n_tables, dtype=np.int64)
+    S = np.where(((idx[:, None] * A1 + pg[None, :] * A2) >> 7) % 2 == 0, np.int64(1), np.int64(-1))
+    bits = ((Va @ S) >= 0).reshape(len(Va), n_tables, n_planes).astype(np.int64)
+    keys = (bits << np.arange(n_planes, dtype=np.int64)).sum(axis=2)
+    return keys | (np.arange(n_tables, dtype=np.int64) << n_planes)
+
+
 def _table_keys_udf(n_planes: int, n_tables: int, m2: int, aug_zero: bool):
-    """Arrow-batched pandas UDF: ALL ``n_tables`` bucket keys of a vector in
-    ONE integer matmul against the ±1 plane matrix. Bit-identical to
-    ``lsh_bucket_col`` per table (same sign rule ((i*A1 + pg*A2) >> 7) % 2,
-    same >=0 bit test, exact int64 sums), but one (batch × d+1) @ (d+1 × 48)
-    GEMM replaces n_tables*n_planes higher-order array aggregates per row —
-    the per-row expression cost made the r3 corpus pass 18.7s at sf0.1 for
-    what is a trivial bucketed join. Asymmetric augmentation happens inside:
-    data vectors append floor(sqrt(m2 - norm2)), queries append 0."""
-    P = n_planes * n_tables
+    """Arrow-batched pandas UDF over ``_table_keys_np``: data vectors
+    append floor(sqrt(m2 - norm2)), queries (``aug_zero``) append 0."""
 
     @F.pandas_udf(ArrayType(LongType()))
     def keys(qv: pd.Series, norm2: pd.Series) -> pd.Series:
-        V = np.stack(qv.to_numpy()).astype(np.int64)  # (b, d)
-        if aug_zero:
-            aug = np.zeros(len(V), dtype=np.int64)
-        else:
-            # float64 sqrt matches F.floor(F.sqrt(...)) IEEE-exactly
-            aug = np.floor(
-                np.sqrt(np.maximum(0.0, float(m2) - norm2.to_numpy(dtype=np.float64)))
-            ).astype(np.int64)
-        Va = np.concatenate([V, aug[:, None]], axis=1)  # (b, d+1)
-        idx = np.arange(Va.shape[1], dtype=np.int64)
-        pg = np.arange(P, dtype=np.int64)
-        S = np.where(
-            ((idx[:, None] * A1 + pg[None, :] * A2) >> 7) % 2 == 0, np.int64(1), np.int64(-1)
-        )
-        bits = (Va @ S) >= 0  # (b, P) — exact int64 sums
-        out = np.zeros((len(Va), n_tables), dtype=np.int64)
-        for t in range(n_tables):
-            for p in range(n_planes):
-                out[:, t] |= bits[:, t * n_planes + p].astype(np.int64) << p
-            out[:, t] |= np.int64(t << n_planes)
-        return pd.Series(list(out))
+        V = np.stack(qv.to_numpy()).astype(np.int64)
+        aug = np.zeros(len(V), dtype=np.int64) if aug_zero else _data_aug(norm2.to_numpy(), m2)
+        return pd.Series(list(_table_keys_np(V, aug, n_planes, n_tables)))
 
     return keys
+
+
+# cells (probing queries x bucket rows) per re-rank GEMM tile. A bucket's
+# rows inside one re-rank chunk are bounded by the chunk size; its probing
+# queries are not (every query can probe one hot bucket), so they are
+# tiled: a tile's dots and selection masks stay ~30 MB at any bucket
+# occupancy and any query count.
+ANN_TILE_CELLS = 1 << 20
+# corpus rows re-ranked together: a task coalesces its Arrow batches (10k
+# rows) so a bucket's rows meet its queries in fewer, larger GEMMs whose
+# top-k cut prunes (a 10k batch splits a 2k-bucket table into ~5-row
+# slivers that the cut cannot shrink). A chunk overshoots this by less
+# than one batch, far below ANN_TILE_CELLS, so a one-query tile row never
+# exceeds the cell cap.
+ANN_CHUNK_ROWS = 1 << 16
+
+
+def _coalesce(batches, rows: int):
+    """Concatenate consecutive pandas batches into frames of >= ``rows``
+    rows (the last one may be shorter)."""
+    buf, n = [], 0
+    for pdf in batches:
+        buf.append(pdf)
+        n += len(pdf)
+        if n >= rows:
+            yield pd.concat(buf)
+            buf, n = [], 0
+    if n:
+        yield pd.concat(buf)
+
+
+def _bucket_topk(Q, qids, qs, Vb, vb, k: int, tile_cells: int):
+    """Per-(query, bucket) top-k of the queries ``qs`` (rows of ``Q``) over
+    one bucket's rows ``Vb`` / ``vb`` (vec_id ascending), in GEMM tiles of
+    at most ``tile_cells`` cells over query rows. Self pairs never enter.
+    The cut keeps, per query, every dot above its k-th best plus the
+    lowest-vec_id ties at it — exactly the first k in (-dot, vec_id)
+    order, found by one partition instead of a sort. Yields (query index,
+    vec_id, dot) arrays per tile."""
+    nr = len(vb)
+    step = max(1, tile_cells // nr)
+    for t in range(0, len(qs), step):
+        qt = qs[t : t + step]
+        neg = -(Q[qt] @ Vb.T)  # (tile, nr), exact (see _gemm_dtype)
+        own = qids[qt][:, None] == vb[None, :]
+        if nr > k:
+            neg[own] = np.inf if neg.dtype.kind == "f" else np.iinfo(np.int64).max
+            kth = np.partition(neg, k - 1, axis=1)[:, k - 1 : k]
+            lt, eq = neg < kth, neg == kth
+            take = lt | (eq & (np.cumsum(eq, axis=1) <= k - lt.sum(axis=1, keepdims=True)))
+        else:
+            take = ~own
+        r, c = np.nonzero(take)
+        yield qt[r], vb[c], (-neg[r, c]).astype(np.int64)
+
+
+def _gemm_dtype(q_norm2: int, m2: int):
+    """float64 when every partial sum of every query x corpus dot is an
+    integer below 2^53 — |partial| <= ||q|| ||v|| (Cauchy-Schwarz), so
+    q_norm2 * m2 < 2^106 — which makes a BLAS float64 GEMM exact (about
+    5x the int64 matmul); int64 otherwise."""
+    return np.float64 if int(q_norm2) * int(m2) < (1 << 106) else np.int64
+
+
+def _merge_topk(top, parts, k: int):
+    """Running per-query top-k. ``top`` (or None) is the current one,
+    (query index, vec_id, dot) arrays ordered by (query, -dot, vec_id);
+    ``parts`` are new candidates. A candidate below its query's current
+    k-th dot cannot enter, so it is dropped before the sort; a pair met via
+    several tables or probes carries the same exact dot, so duplicates
+    are adjacent after the sort and dropped."""
+    qi, vid, dot = (np.concatenate(c) for c in zip(*parts))
+    if top is not None:
+        tq, tv, td = top
+        kth = (np.arange(len(tq)) - np.searchsorted(tq, tq)) == k - 1
+        thr = np.full(1 + max(int(qi.max(initial=0)), int(tq.max(initial=0))), np.iinfo(np.int64).min)
+        thr[tq[kth]] = td[kth]
+        m = dot >= thr[qi]
+        qi, vid, dot = np.concatenate([tq, qi[m]]), np.concatenate([tv, vid[m]]), np.concatenate([td, dot[m]])
+    o = np.lexsort((vid, -dot, qi))
+    qi, vid, dot = qi[o], vid[o], dot[o]
+    new = np.ones(len(qi), dtype=bool)
+    new[1:] = (qi[1:] != qi[:-1]) | (vid[1:] != vid[:-1])
+    qi, vid, dot = qi[new], vid[new], dot[new]
+    rank = np.arange(len(qi)) - np.searchsorted(qi, qi)
+    m = rank < k
+    return qi[m], vid[m], dot[m]
 
 
 def ann_lsh(emb: DataFrame, n_queries: int = 16, k: int = 10, n_planes: int | None = None) -> DataFrame:
@@ -175,27 +262,34 @@ def ann_lsh(emb: DataFrame, n_queries: int = 16, k: int = 10, n_planes: int | No
          inner-product order (a no-op for pre-normalized corpora);
       2. MULTI-PROBE: each query probes its own bucket plus all Hamming-1
          and Hamming-2 flips (vectors near a hyperplane land on either
-         side; probe rows live on the tiny broadcast side, so deeper
-         probing costs nothing on the corpus);
+         side; probes live on the tiny broadcast side, so deeper probing
+         costs nothing on the corpus);
       3. MULTIPLE TABLES: n_tables independent plane families; a true
-         neighbor is found if ANY table collides — recall
-         1-(1-r)^L. The data side explodes over tables map-side (queries
-         are the broadcast side; nothing reshuffles the corpus).
+         neighbor is found if ANY table collides — recall 1-(1-r)^L.
     ``n_planes=None`` (default) sizes the plane count off the corpus row
     count (auto_planes) so bucket occupancy stays ~LSH_BUCKET_TARGET_ROWS
     at any scale; corpora up to ~8k rows get the historical 6.
     The re-rank uses the ORIGINAL vectors' exact integer dot. Output shape
-    == topk_dot (rn may be < k if buckets are small). At 100TB the
-    bucketed join replaces topk_dot's full scan; recall is pytest-checked
-    AND logged per bench run (ann_recall_at_10).
+    == topk_dot (rn may be < k if buckets are small). vec_id is the
+    corpus key. Recall is pytest-checked AND logged per bench run
+    (ann_recall_at_10).
 
-    Plan shape: the corpus pass is ONE pandas-UDF projection (all 8 table
-    keys per row in one matmul, see _table_keys_udf); probe flips
-    (Hamming-0/1/2 XOR masks) expand the small query side; candidates are
-    re-ranked per BUCKET by one exact int64 GEMM per cogrouped bucket with
-    a lossless per-(query, bucket) top-k cut, so candidate PAIRS are never
-    materialized (see the inline note) and only <= k rows per (qid,
-    bucket) reach the global window."""
+    Plan shape: the query rows are collected ONCE; their keys and the
+    Hamming-0/1/2 probe set are computed on the driver and broadcast as
+    sorted probed buckets -> query lists. The corpus is never shuffled:
+    ONE mapInPandas over its own partitions hashes each chunk of rows for
+    all tables (_table_keys_np, the same function as the UDF), keeps the
+    (row, table) pairs whose bucket some query probes (a searchsorted
+    semi-join against the broadcast), and re-ranks each probed bucket by
+    exact GEMM tiles over its probing queries, at most ANN_TILE_CELLS
+    cells each, so a hot bucket has a fixed memory bound at any occupancy.
+    Each (query, bucket-within-chunk) keeps its top-k in (-dot, vec_id)
+    order: a global top-k member beats fewer than k candidates in EVERY
+    subset of the corpus that contains it, so the cut is lossless, as is
+    the running per-query top-k each task keeps across its chunks (deduped
+    on (qid, vec_id): a pair met via several tables has one exact dot). At
+    most k rows per query per partition cross the one exchange, into the
+    global row_number window."""
     base = quantized_embeddings(emb)
     m2, n_corpus = _corpus_stats(base)
     if n_planes is None:
@@ -207,87 +301,53 @@ def ann_lsh(emb: DataFrame, n_queries: int = 16, k: int = 10, n_planes: int | No
     # where the per-bit collision probability is low for EVERY plane
     # family, so extra tables mostly re-find the already-found.
     n_tables = 8
-    dkeys = _table_keys_udf(n_planes, n_tables, m2, aug_zero=False)(F.col("qv"), F.col("norm2"))
-    corpus_b = base.select("vec_id", "qv", F.explode(dkeys).alias("bucket"))
-    qbase = base.where(F.col("vec_id") < n_queries)
-    qkeys = _table_keys_udf(n_planes, n_tables, m2, aug_zero=True)(F.col("qv"), F.col("norm2"))
-    masks = (
-        [0]
-        + [1 << p for p in range(n_planes)]
-        + [(1 << p) | (1 << p2) for p in range(n_planes) for p2 in range(p + 1, n_planes)]
-    )
-    qprobe = (
-        qbase.select(F.col("vec_id").alias("qid"), F.explode(qkeys).alias("b0"))
-        .select("qid", "b0", F.explode(F.array(*[F.lit(m) for m in masks])).alias("mask"))
-        .select("qid", F.col("b0").bitwiseXOR(F.col("mask")).alias("bucket"))
-    )
-    # Per-BUCKET GEMM re-rank (r7): the prior shape materialized one row
-    # per (qid, vec_id) candidate PAIR and computed a higher-order-function
-    # dot per pair — at the 1M-vector study the skewed buckets emitted
-    # 10^8+ pairs and the pair join + per-pair dot was 1026s of the wall.
-    # Instead, cogroup the corpus's (vec_id, qv, bucket) rows with the
-    # probe rows per bucket and compute ALL of a bucket's query x corpus
-    # dots as ONE int64 numpy GEMM (exact: |qv| <= ~2^12, d sums << 2^63,
-    # identical to the old per-pair aggregate), keeping only the per-
-    # (query, bucket) top-k. A global top-k member beats < k candidates in
-    # EVERY bucket that contains it, so the per-bucket cut is lossless and
-    # only <= k rows per (qid, bucket) reach the dedup + global window.
-    # The embedding array rides the xL explode once (L*corpus bytes
-    # shuffled, bounded) instead of riding every candidate pair.
-    spark = emb.sparkSession
-    qpd = qbase.select("vec_id", "qv").toPandas()
-    qindex = {int(v): i for i, v in enumerate(qpd["vec_id"].to_numpy())}
-    qmat = (
-        np.stack(qpd["qv"].to_numpy()).astype(np.int64)
-        if len(qpd)
-        else np.zeros((0, 1), dtype=np.int64)
-    )
-    bq = spark.sparkContext.broadcast((qindex, qmat))
-    kk = int(k)
+    # ONE collect of the query rows feeds both the probe set and the
+    # re-rank matrix, so every probing query has its vector
+    qpd = base.where(F.col("vec_id") < n_queries).select("vec_id", "qv").toPandas()
+    qids = qpd["vec_id"].to_numpy(dtype=np.int64)
+    Q = np.stack(qpd["qv"].to_numpy()).astype(np.int64) if len(qpd) else np.zeros((0, 0), np.int64)
+    qkeys = _table_keys_np(Q, np.zeros(len(Q), dtype=np.int64), n_planes, n_tables)
+    p = range(n_planes)  # Hamming-0/1/2 XOR masks
+    masks = np.array([0] + [1 << a for a in p] + [(1 << a) | (1 << b) for a in p for b in p if b > a], dtype=np.int64)
+    pb = (qkeys[:, :, None] ^ masks[None, None, :]).ravel()  # query-major probe buckets
+    order = np.argsort(pb, kind="stable")
+    pq = np.repeat(np.arange(len(Q), dtype=np.int64), n_tables * len(masks))[order]
+    ub, starts = np.unique(pb[order], return_index=True)  # probed buckets, sorted
+    starts = np.append(starts, len(pb))  # bucket ub[i] -> queries pq[starts[i]:starts[i+1]]
+    gd = _gemm_dtype((Q * Q).sum(axis=1).max(initial=0), m2)
+    bq = emb.sparkSession.sparkContext.broadcast((qids, Q.astype(gd), ub, starts, pq))
+    kk, tile_cells, chunk_rows = int(k), ANN_TILE_CELLS, ANN_CHUNK_ROWS
 
-    def _bucket_topk(cpdf: pd.DataFrame, ppdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {
-                "qid": pd.Series(dtype="int64"),
-                "vec_id": pd.Series(dtype="int64"),
-                "dot": pd.Series(dtype="int64"),
-            }
-        )
-        if not len(cpdf) or not len(ppdf):
-            return empty
-        qidx, qm = bq.value
-        V = np.stack(cpdf["qv"].to_numpy()).astype(np.int64)
-        vid = cpdf["vec_id"].to_numpy()
-        qs = ppdf["qid"].to_numpy()
-        dots = qm[[qidx[int(q)] for q in qs]] @ V.T  # (nq_b, nv_b) exact
-        oq, ov, od = [], [], []
-        for r in range(len(qs)):
-            keep = vid != qs[r]  # self-exclusion, as the old pair filter
-            ids, dd = vid[keep], dots[r][keep]
-            if not len(ids):
-                continue
-            top = np.lexsort((ids, -dd))[: min(kk, len(ids))]  # (-dot, vec_id)
-            oq.append(np.full(len(top), qs[r], dtype=np.int64))
-            ov.append(ids[top])
-            od.append(dd[top])
-        if not oq:
-            return empty
-        return pd.DataFrame(
-            {
-                "qid": np.concatenate(oq),
-                "vec_id": np.concatenate(ov),
-                "dot": np.concatenate(od),
-            }
-        )
+    def _rerank(batches):
+        qids, Q, ub, starts, pq = bq.value
+        if not len(ub):
+            return
+        top, pending, n_pending = None, [], 0
+        for pdf in _coalesce(batches, chunk_rows):
+            vid = pdf["vec_id"].to_numpy(dtype=np.int64)
+            V = np.stack(pdf["qv"].to_numpy()).astype(np.int64)
+            keys = _table_keys_np(V, _data_aug(pdf["norm2"].to_numpy(), m2), n_planes, n_tables).ravel()
+            pos = np.minimum(np.searchsorted(ub, keys), len(ub) - 1)
+            hit = np.flatnonzero(ub[pos] == keys)  # probed-bucket semi-join
+            rows, bi = hit // n_tables, pos[hit]
+            o = np.lexsort((vid[rows], bi))  # by bucket, vec_id ascending inside
+            rows, bi = rows[o], bi[o]
+            V = V.astype(Q.dtype, copy=False)
+            bounds = np.flatnonzero(np.diff(bi, prepend=-1, append=-1))
+            for lo, hi in zip(bounds[:-1], bounds[1:]):
+                b, r = bi[lo], rows[lo:hi]
+                for part in _bucket_topk(Q, qids, pq[starts[b] : starts[b + 1]], V[r], vid[r], kk, tile_cells):
+                    pending.append(part)
+                    n_pending += len(part[0])
+                if n_pending >= tile_cells:
+                    top, pending, n_pending = _merge_topk(top, pending, kk), [], 0
+        if pending:
+            top = _merge_topk(top, pending, kk)
+        if top is not None:
+            qi, vid, dot = top
+            yield pd.DataFrame({"qid": qids[qi], "vec_id": vid, "dot": dot})
 
-    cand = (
-        corpus_b.groupBy("bucket")
-        .cogroup(qprobe.groupBy("bucket"))
-        .applyInPandas(_bucket_topk, "qid long, vec_id long, dot long")
-        # a pair reached via several tables/probes carries the SAME exact
-        # dot every time — dedup before ranking, as the old distinct did
-        .dropDuplicates(["qid", "vec_id"])
-    )
+    cand = base.mapInPandas(_rerank, "qid long, vec_id long, dot long")
     w = Window.partitionBy("qid").orderBy(F.col("dot").desc(), F.col("vec_id"))
     return (
         cand.withColumn("rn", F.row_number().over(w))

@@ -10,17 +10,16 @@ neutralized by ``repartitionByRange`` on the key, whose reservoir-sampled
 range bounds play the role of the reference's pick_pivots sampling
 (build_tree.hpp:48-70).
 
-All encoding is vectorized numpy inside Arrow-batched pandas UDFs — no
-per-row Python (input_hint requirement).
+Spark-side encoding is one SQL expression (``morton_col``); the numpy
+encoders serve driver-side and Arrow-batched code — no per-row Python
+(input_hint requirement).
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType
 
 from .config import GRID_BITS
 
@@ -90,18 +89,6 @@ def morton_col(cols: list[Column | str], d: int, bits: int = GRID_BITS) -> Colum
             dst = b * d + (d - 1 - j)
             terms.append(f"shiftleft(shiftrightunsigned({cs}, {b}) & 1, {dst})")
     return F.expr(" + ".join(terms))
-
-
-def morton_col_pandas(cols: list[Column], d: int, bits: int = GRID_BITS) -> Column:
-    """Arrow-batched pandas-UDF variant of morton_col (kept for parity
-    testing and as the template for UDF-based encodes)."""
-
-    @F.pandas_udf(LongType())
-    def _enc(*series: pd.Series) -> pd.Series:
-        arr = np.stack([s.to_numpy(dtype=np.int64) for s in series], axis=1)
-        return pd.Series(morton_encode_np(arr, bits=bits))
-
-    return _enc(*cols)
 
 
 def cell_col(morton: Column, d: int, level: int, bits: int = GRID_BITS) -> Column:

@@ -171,15 +171,51 @@ def test_ann_lsh_adaptive_planes(spark, emb):
         big.unpersist()
 
 
-def test_ann_lsh_bucket_gemm_matches_pair_join(spark, emb):
-    """r7: ann_lsh's per-bucket GEMM re-rank (lossless per-(query, bucket)
-    top-k before the global window) must be bit-identical to the
-    candidate-pair join + per-pair exact HOF dot it replaced — same
-    buckets, same probes, same exact int64 dots, same (-dot, vec_id)
-    tie-break."""
+HOT_LO, HOT_ROWS = 8, 400  # hot slice vec_ids [8, 408): queries 8..15 are hot rows
+
+
+@pytest.fixture(scope="module")
+def emb_hot(spark, emb):
+    """``emb`` plus HOT_ROWS identical vectors — one bucket per table, far
+    over LSH_BUCKET_TARGET_ROWS — in one partition, so the whole hot
+    bucket meets its queries in one re-rank chunk. The other rows' ids move past
+    the slice, so half of the first 16 queries sit inside it."""
+    hot_vec = emb.where(F.col("vec_id") == 100).select("embedding", "label")
+    hot = (
+        spark.range(HOT_LO, HOT_LO + HOT_ROWS, 1, 1)
+        .crossJoin(hot_vec)
+        .select(F.col("id").alias("vec_id"), "embedding", "label")
+    )
+    rest = emb.select(
+        F.when(F.col("vec_id") < HOT_LO, F.col("vec_id"))
+        .otherwise(F.col("vec_id") + HOT_ROWS)
+        .alias("vec_id"),
+        "embedding",
+        "label",
+    )
+    out = rest.unionByName(hot).persist()
+    yield out
+    out.unpersist()
+
+
+@pytest.mark.parametrize("corpus", ["emb", "emb_hot"])
+def test_ann_lsh_bucket_gemm_matches_pair_join(spark, corpus, request, monkeypatch):
+    """ann_lsh's map-side per-bucket GEMM re-rank (lossless per-(query,
+    bucket) top-k, running per-query top-k per partition, then the global
+    window) must be bit-identical to the candidate-pair join + per-pair
+    exact HOF dot — same buckets, same probes, same exact int64 dots, same
+    (-dot, vec_id) tie-break. On the hot corpus the GEMM tile cap is
+    lowered so the hot bucket's probing queries span several tiles, with
+    hot queries' own rows inside their tiles and equal dots throughout,
+    and the GEMM runs in int64 (the emb case takes the exact float64 one)."""
     import pkd_tree_spark.pipeline.similarity as S
     from pyspark.sql import Window
 
+    emb = request.getfixturevalue(corpus)
+    if corpus == "emb_hot":
+        monkeypatch.setattr(S, "ANN_TILE_CELLS", 2 * HOT_ROWS)  # 2 queries per hot tile
+        monkeypatch.setattr(S, "_gemm_dtype", lambda q_norm2, m2: np.int64)
+        assert HOT_ROWS * (16 - HOT_LO) > S.ANN_TILE_CELLS  # the hot queries alone need several
     base = S.quantized_embeddings(emb)
     m2, n = S._corpus_stats(base)
     n_planes, n_tables, nq, k = S.auto_planes(n), 8, 16, 10
@@ -229,6 +265,37 @@ def test_ann_lsh_bucket_gemm_matches_pair_join(spark, emb):
         .reset_index(drop=True)
     )
     pd.testing.assert_frame_equal(got, want)
+    assert not (got.qid == got.vec_id).any()
+    same_q = got.qid.to_numpy()[1:] == got.qid.to_numpy()[:-1]
+    d, v = got["dot"].to_numpy(), got.vec_id.to_numpy()
+    # (-dot, vec_id) strictly increasing inside each query: ties by vec_id
+    assert ((d[1:] < d[:-1]) | ((d[1:] == d[:-1]) & (v[1:] > v[:-1])))[same_q].all()
+    if corpus == "emb_hot":
+        hot = got[got.qid >= HOT_LO]
+        assert hot.duplicated(["qid", "dot"]).any()  # equal-dot ties really occur
+        assert hot.qid.nunique() == 16 - HOT_LO
+
+
+def test_ann_lsh_empty_and_all_queries(emb, emb_q):
+    """Degenerate query sets take the same map-side plan without raising
+    inside the UDF: no queries -> an empty (qid, rn, vec_id, dot) frame;
+    every corpus row a query -> at most k exact-dot rows per query, never
+    the query itself."""
+    k = 10
+    empty = SIM.ann_lsh(emb, n_queries=0, k=k)
+    assert [(f.name, f.dataType.simpleString()) for f in empty.schema.fields] == [
+        ("qid", "bigint"), ("rn", "bigint"), ("vec_id", "bigint"), ("dot", "bigint")
+    ]
+    assert empty.count() == 0
+    ids, q = emb_q
+    got = SIM.ann_lsh(emb, n_queries=int(ids.max()) + 10, k=k).toPandas()
+    assert len(got) and set(got.qid) <= set(ids.tolist())
+    assert not (got.qid == got.vec_id).any()
+    assert got.groupby("qid").size().max() <= k
+    assert not got.duplicated(["qid", "vec_id"]).any()
+    pos = pd.Series(np.arange(len(ids)), index=ids)
+    exact = (q[pos[got.qid].to_numpy()] * q[pos[got.vec_id].to_numpy()]).sum(axis=1)
+    assert np.array_equal(got["dot"].to_numpy(), exact)
 
 
 def test_embedding_dup_pairs_exact(emb, emb_q):

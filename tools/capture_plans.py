@@ -1,14 +1,16 @@
-"""Capture .explain('formatted') plans for the round-7 touched queries into
-plans/r07/<query>_{before,after}.txt.
+"""Capture .explain('formatted') plans of the engine's touched queries into
+<out>/<query>_{before,after}.txt (default out: plans/r07).
 
 'after' runs against the working tree; 'before' runs the SAME capture
-against a round-start checkout (git archive of the round-start commit into
-a temp dir prepended to sys.path). Usage:
+against another checkout (git archive of <sha> into a temp dir prepended
+to sys.path). Usage:
 
-    python tools/capture_plans.py after
-    python tools/capture_plans.py before <round-start-sha>
+    python tools/capture_plans.py after [--out DIR] [--only NAME ...]
+    python tools/capture_plans.py before <sha> [--out DIR] [--only NAME ...]
 
-Plans are captured lazily (no jobs beyond tiny metadata actions), at
+NAME is one of the CAPTURES keys below; without --only every entry runs.
+Plans are captured lazily (no jobs beyond tiny metadata actions and the
+small driver collects an operator does before it returns its frame), at
 sf0.1 shapes. For kNN the ring loop runs per-round jobs, so the file
 carries the round-1 candidate-join optimized plan (plan_log hook) plus the
 final result frame's formatted plan.
@@ -16,6 +18,8 @@ final result frame's formatted plan.
 
 from __future__ import annotations
 
+import argparse
+import functools
 import io
 import os
 import subprocess
@@ -23,19 +27,23 @@ import sys
 import tempfile
 from contextlib import redirect_stdout
 
-MODE = sys.argv[1] if len(sys.argv) > 1 else "after"
-OUTDIR = os.path.join(os.path.dirname(__file__), "..", "plans", "r07")
+ROOT = os.path.join(os.path.dirname(os.path.abspath(__file__)), "..")
+ap = argparse.ArgumentParser(description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter)
+ap.add_argument("mode", choices=("before", "after"))
+ap.add_argument("sha", nargs="?", help="commit to capture in 'before' mode")
+ap.add_argument("--out", default=os.path.join(ROOT, "plans", "r07"))
+ap.add_argument("--only", nargs="+", metavar="NAME")
+ARGS = ap.parse_args()
+MODE = ARGS.mode
 
 if MODE == "before":
-    sha = sys.argv[2]
-    tmp = tempfile.mkdtemp(prefix="pkd_r6_checkout_")
-    subprocess.run(
-        f"git -C {os.path.dirname(__file__)}/.. archive {sha} | tar -x -C {tmp}",
-        shell=True, check=True,
-    )
+    if not ARGS.sha:
+        ap.error("'before' needs a commit")
+    tmp = tempfile.mkdtemp(prefix="pkd_before_checkout_")
+    subprocess.run(f"git -C {ROOT} archive {ARGS.sha} | tar -x -C {tmp}", shell=True, check=True)
     sys.path.insert(0, tmp)
 else:
-    sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
+    sys.path.insert(0, ROOT)
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -49,11 +57,11 @@ from pkd_tree_spark.updates import merge_delete, merge_insert  # noqa: E402
 from pkd_tree_spark import fixtures as FX  # noqa: E402
 
 SF = "/root/testdata/sf0.1"
-os.makedirs(OUTDIR, exist_ok=True)
+os.makedirs(ARGS.out, exist_ok=True)
 
 
 def dump(name: str, text: str):
-    with open(os.path.join(OUTDIR, f"{name}_{MODE}.txt"), "w") as f:
+    with open(os.path.join(ARGS.out, f"{name}_{MODE}.txt"), "w") as f:
         f.write(text)
     print(f"wrote {name}_{MODE}.txt ({len(text)} bytes)")
 
@@ -69,69 +77,114 @@ spark = get_spark(app="plan-capture", cpus=8)
 spark.sparkContext.setLogLevel("ERROR")
 
 cfg = EngineConfig(dims=2, index_level=7, knn_level=6, partitions=32)
-pts = load_points(spark, SF, dims=2, dist="uniform")
-ix = SpatialIndex.build(pts, cfg)
-ix.points.count()
-ix.meta.count()
 
-# --- range count (1000 mixed boxes, the bench entry) ---
-boxes = FX.box_fixtures(1000, 2)
-dump("range_count_uniform", formatted(range_count_boxes(ix, boxes)))
 
-# --- d=3 range count (budget change) ---
-cfg3 = EngineConfig(dims=3, index_level=6, knn_level=5, partitions=32)
-pts3 = load_points(spark, SF, dims=3, dist="uniform")
-ix3 = SpatialIndex.build(pts3, cfg3)
-ix3.points.count()
-ix3.meta.count()
-dump("range_count_d3", formatted(range_count_boxes(ix3, FX.box_fixtures(256, 3))))
-ix3.release()
+@functools.cache
+def _pts():
+    return load_points(spark, SF, dims=2, dist="uniform")
 
-# --- kNN (bench query sample): round plans via plan_log + result frame ---
-qdf = (
-    ix.points.where(F.col("key") % 100 == 3)
-    .select(F.col("key").alias("qid"), F.col("x0").alias("q0"), F.col("x1").alias("q1"))
-    .dropDuplicates(["qid"])
-)
-plans: list = []
-res = knn(ix, qdf, k=10, level=auto_knn_level(600_000, 2), plan_log=plans)
-txt = formatted(res.groupBy().agg(F.sum("dist2")))
-for i, p in enumerate(plans):
-    txt += f"\n\n===== round {i+1} candidate-join optimized plan =====\n"
-    txt += p["plan"]
-    txt += f"\nlvl_counts: {p['lvl_counts']}\n"
-dump("knn10_uniform", txt)
 
-# --- batch delete 1% (broadcast anti-join path) ---
-batch = ix.points.where(F.col("key") % 100 == 7).select(
-    "doc_id", "span_idx", (F.col("key") + 3_000_000_000).alias("key"), "x0", "x1"
-)
-ins = merge_insert(ix, batch, persist=False)
-dels = merge_delete(ins, batch, exact_rows=True, persist=False)
-dump("batch_delete_1pct", formatted(dels.points))
+@functools.cache
+def _ix():
+    ix = SpatialIndex.build(_pts(), cfg)
+    ix.points.count()
+    ix.meta.count()
+    return ix
 
-# --- oversized delete (bucket-routed after / shuffled-hash before):
-# force the over-broadcast branch by shrinking the gate so the 60k-key
-# batch exercises the large-batch plan shape at sf0.1
-import pkd_tree_spark.updates as U  # noqa: E402
 
-orig = U.DELETE_BCAST_ROWS
-U.DELETE_BCAST_ROWS = 1000
-try:
-    dels10 = merge_delete(ins, batch, exact_rows=True, persist=False)
-    dump("batch_delete_large", formatted(dels10.points))
-finally:
-    U.DELETE_BCAST_ROWS = orig
+@functools.cache
+def _batch_and_ins():
+    ix = _ix()
+    batch = ix.points.where(F.col("key") % 100 == 7).select(
+        "doc_id", "span_idx", (F.col("key") + 3_000_000_000).alias("key"), "x0", "x1"
+    )
+    return batch, merge_insert(ix, batch, persist=False)
 
-# --- duplicate collapse (pruned table build probe + window) ---
-lattice = pts.select(
-    "doc_id", "span_idx", "key", *[(F.col(f"x{j}") % 20 * 52_631).alias(f"x{j}") for j in range(2)]
-)
-ixl = SpatialIndex.build(lattice, cfg)
-ixl.points.count()
-ixl.meta.count()
-p = ixl.pruned_points(10)
-dump("dedup_collapse", formatted(p) if p is not None else "refused (no pruned table)\n")
-ixl.release()
+
+def range_count_uniform():
+    """range count (1000 mixed boxes, the bench entry)"""
+    dump("range_count_uniform", formatted(range_count_boxes(_ix(), FX.box_fixtures(1000, 2))))
+
+
+def range_count_d3():
+    """d=3 range count (budget change)"""
+    cfg3 = EngineConfig(dims=3, index_level=6, knn_level=5, partitions=32)
+    ix3 = SpatialIndex.build(load_points(spark, SF, dims=3, dist="uniform"), cfg3)
+    ix3.points.count()
+    ix3.meta.count()
+    dump("range_count_d3", formatted(range_count_boxes(ix3, FX.box_fixtures(256, 3))))
+    ix3.release()
+
+
+def knn10_uniform():
+    """kNN (bench query sample): round plans via plan_log + result frame"""
+    ix = _ix()
+    qdf = (
+        ix.points.where(F.col("key") % 100 == 3)
+        .select(F.col("key").alias("qid"), F.col("x0").alias("q0"), F.col("x1").alias("q1"))
+        .dropDuplicates(["qid"])
+    )
+    plans: list = []
+    res = knn(ix, qdf, k=10, level=auto_knn_level(600_000, 2), plan_log=plans)
+    txt = formatted(res.groupBy().agg(F.sum("dist2")))
+    for i, p in enumerate(plans):
+        txt += f"\n\n===== round {i+1} candidate-join optimized plan =====\n"
+        txt += p["plan"]
+        txt += f"\nlvl_counts: {p['lvl_counts']}\n"
+    dump("knn10_uniform", txt)
+
+
+def batch_delete_1pct():
+    """batch delete 1% (broadcast anti-join path)"""
+    batch, ins = _batch_and_ins()
+    dump("batch_delete_1pct", formatted(merge_delete(ins, batch, exact_rows=True, persist=False).points))
+
+
+def batch_delete_large():
+    """oversized delete: shrink the broadcast gate so the 60k-key batch
+    exercises the large-batch plan shape at sf0.1"""
+    import pkd_tree_spark.updates as U
+
+    batch, ins = _batch_and_ins()
+    orig = U.DELETE_BCAST_ROWS
+    U.DELETE_BCAST_ROWS = 1000
+    try:
+        dump("batch_delete_large", formatted(merge_delete(ins, batch, exact_rows=True, persist=False).points))
+    finally:
+        U.DELETE_BCAST_ROWS = orig
+
+
+def dedup_collapse():
+    """duplicate collapse (pruned table build probe + window)"""
+    lattice = _pts().select(
+        "doc_id", "span_idx", "key", *[(F.col(f"x{j}") % 20 * 52_631).alias(f"x{j}") for j in range(2)]
+    )
+    ixl = SpatialIndex.build(lattice, cfg)
+    ixl.points.count()
+    ixl.meta.count()
+    p = ixl.pruned_points(10)
+    dump("dedup_collapse", formatted(p) if p is not None else "refused (no pruned table)\n")
+    ixl.release()
+
+
+def ann_lsh():
+    """ann_lsh, 16 queries over the sf0.1 embeddings (the bench entry);
+    the plan shows whether the corpus crosses an Exchange"""
+    from pkd_tree_spark.pipeline.similarity import ann_lsh as ann
+
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    dump("ann_lsh", formatted(ann(emb, n_queries=16, k=10)))
+
+
+CAPTURES = {
+    f.__name__: f
+    for f in (
+        range_count_uniform, range_count_d3, knn10_uniform, batch_delete_1pct,
+        batch_delete_large, dedup_collapse, ann_lsh,
+    )
+}
+
+for name in ARGS.only or CAPTURES:
+    CAPTURES[name]()
 
 print("done")
