@@ -15,6 +15,14 @@ bench.py, and appends its record to a JSON file under BENCH/.
   ann            ann_lsh with 4096 queries over a rotated-replica corpus
                  (~1M vectors); recall@10 vs a driver-side exact numpy
                  ground truth computed OUTSIDE the timed region.
+  knn            1%-of-n batch 10-NN on varden and uniform points, run
+                 twice per distribution: as shipped (distributed loop,
+                 then the driver loop for the pending tail) and with
+                 DRIVER_CELLS_MAX_QUERIES = 0 (every round distributed, so
+                 the Spark-side next-radius rule runs on every round);
+                 wall, ring rounds max/avg and candidate rows per query,
+                 and the two runs' rows must be equal. Keep
+                 SPARK_GRAFT_REPLICATE <= 16 on a 4-core / 15 GB box.
   varden-profile build stage breakdown (derivation+stage write / range
                  shuffle+persist / meta agg) for uniform AND varden at
                  this core count — run it at 4 and 16 cores to localize
@@ -280,6 +288,53 @@ def study_ann(
     }
 
 
+def study_knn() -> dict:
+    import unittest.mock as mock
+
+    from pyspark.sql import functions as F
+
+    from pkd_tree_spark import knn as K
+    from pkd_tree_spark.index import SpatialIndex
+
+    spark = _spark()
+    cfg = _cfg()
+    rec = {"study": "knn", "cpus": CPUS, "replicate": REPLICATE, "k": 10, "runs": {}}
+    for dist in ("varden", "uniform"):
+        ix = SpatialIndex.build(_points(spark, dist), cfg)
+        n = ix.points.count()
+        ix.meta.count()
+        ix.release_staged()
+        qdf = (
+            ix.points.where(F.col("key") % 100 == 3)
+            .select(F.col("key").alias("qid"), F.col("x0").alias("q0"), F.col("x1").alias("q1"))
+            .dropDuplicates(["qid"])
+            .persist()
+        )
+        nq = qdf.count()
+        lvl = K.auto_knn_level(n, 2)
+        runs, rows = {}, {}
+        for name, cap in (("shipped", K.DRIVER_CELLS_MAX_QUERIES), ("distributed", 0)):
+            with mock.patch.object(K, "DRIVER_CELLS_MAX_QUERIES", cap):
+                t0 = time.time()
+                res, st = K.knn(ix, qdf, k=10, level=lvl, return_stats=True)
+                got = res.select("qid", "rn", "key", "span_idx", "dist2").toPandas()
+                stats = st.toPandas()
+                wall = time.time() - t0
+            rows[name] = got.sort_values(["qid", "rn"]).reset_index(drop=True)
+            runs[name] = {
+                "wall_sec": round(wall, 3),
+                "rounds_max": int(stats["rounds"].max()),
+                "rounds_avg": round(float(stats["rounds"].mean()), 4),
+                "cand_rows_per_query": round(float(stats["cand_rows"].mean()), 2),
+                "result_rows": len(got),
+            }
+        assert rows["shipped"].equals(rows["distributed"]), f"{dist}: the two runs' rows differ"
+        rec["runs"][dist] = {"n_points": int(n), "n_queries": int(nq), "rows_equal": True, **runs}
+        qdf.unpersist()
+        ix.release()
+    return rec
+
+
 def study_varden_profile() -> dict:
     from pyspark.storagelevel import StorageLevel
 
@@ -326,6 +381,7 @@ def main():
         "cow": study_cow,
         "window": study_window,
         "ann": study_ann,
+        "knn": study_knn,
         "varden-profile": study_varden_profile,
     }[study]
     rec = fn()

@@ -6,15 +6,29 @@ lower-bound pruning (query_op/nn_search.hpp:81-126), Q2 bounded top-k
 
 Distributed formulation: each query scans, round by round, the cells in
 the Chebyshev SHELL (r_prev, r] around its home cell at a per-query grid
-level g (cell width w = 2^(coord_bits - g)); r doubles each round, so the
-shells are disjoint and their union is the full radius-r disk. The running
-top-k is CARRIED on the pending-query row and merged with each shell's
-candidates — a cell is scanned at most once per query (the reference
-visits each tree node once; round 2 of this engine re-scanned the whole
-disk every round). After ring r any unscanned point is at distance
->= r*w + 1, so a query terminates once kth_dist^2 <= (r*w)^2 — exactly the
+level g (cell width w = 2^(coord_bits - g)). Each pending row carries its
+shell's inner radius r_prev explicitly, so the shells are disjoint and
+their union is the full radius-r disk. The running top-k is CARRIED on the
+pending-query row and merged with each shell's candidates — a cell is
+scanned at most once per query (the reference visits each tree node once).
+After ring r any unscanned point is at distance >= r*w + 1, so a query
+terminates once kth_dist^2 <= (r*w)^2 — exactly the
 `p2b_min_distance > bq.top()` prune of nn_search.hpp:121-123 lifted to
 ring granularity.
+
+Bound-driven radius (_next_radius): the next ring is the smallest one the
+evidence in hand PROVES sufficient, the same bound nn_search.hpp:121-123
+prunes with. A query holding k candidates jumps to r = ceil(sqrt(kth)/w),
+after which its kth (which can only shrink) meets the ring bound. A query
+holding fewer takes the k-th smallest farthest-corner distance to the
+skeleton's occupied leaf bboxes: every occupied leaf holds a point, so k
+points lie within it. Either way the query finishes in the next round —
+at most two rounds per query unless a jump would cross MESH_CAP where
+doubling would not (then the ring stops at the cap) or the skeleton is
+too large to memoize (then r doubles). The leaf bound is loose for a
+query that sits inside a leaf much wider than its own cells: its ring can
+reach far past the neighbours it needs (more candidates, never a third
+round).
 
 High-d / large-ring escape: when a round's offset mesh (2r+1)^d would
 exceed MESH_CAP cells (d=7 at r>=4, d=16 immediately — the reference
@@ -30,7 +44,10 @@ The query set is a DataFrame END-TO-END (the reference's headline batch is
 10^7 queries, testFramework.h:470-520 with batchQueryRatio=0.01 at n=10^9):
 ring-cell generation runs inside mapInPandas; per-round termination is a
 join + column expressions; the engine issues O(1) driver actions per round
-independent of query count.
+independent of query count. Once at most DRIVER_CELLS_MAX_QUERIES queries
+are pending, the distributed loop hands its state (rings, carried top-k,
+counts) to the driver loop, which finishes the tail at one Spark job per
+round.
 
 Skew adaptivity (the kd-tree's density-adaptive depth, which a fixed grid
 lacks): a per-query level is chosen from the index's DENSITY LADDER — see
@@ -82,6 +99,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .config import EngineConfig
 from .index import SpatialIndex, morton_interval_pred
@@ -102,13 +120,14 @@ MESH_CAP_LOG2 = 18.0
 # skips cold regions in round 1 on skewed inputs and ~the whole table in
 # straggler rounds. Skipped if the distinct set somehow exceeds this cap.
 LEAF_COLLECT_CAP = 100_000
-# pending sets at or below this many queries generate + resolve their shell
-# cells ON THE DRIVER (one small Arrow collect, numpy resolution, local
+# pending sets at or below this many queries run the ring loop ON THE
+# DRIVER (_knn_driver: one small Arrow collect, numpy resolution, local
 # relations broadcast without a job) instead of mapInPandas on executors:
 # the executor path costs a Python-worker round plus a separate
 # cells-distribution collect job per round, pure overhead at bench-query
-# counts (and every straggler round >= 2 is tiny). Large query batches
-# (the 1%-of-n harness at 38.4M+) keep the distributed path.
+# counts. Large query batches (the 1%-of-n harness at 38.4M+) start on the
+# distributed loop and hand their pending tail to the driver loop once it
+# fits under this cap.
 DRIVER_CELLS_MAX_QUERIES = 20_000
 # round-1 cell relations above this row count take a SHUFFLED join against
 # the points (planner's choice, sort-merge at these shapes) instead of a
@@ -124,7 +143,10 @@ DRIVER_CELLS_MAX_QUERIES = 20_000
 # eff 0.84 while 38.4M sat at 0.42: the serial relation build didn't scale
 # with cores. 1M rows ≈ 24MB of relation — comfortably broadcastable when
 # under; straggler rounds and bench-sized batches stay broadcast/local.
-CELLS_BCAST_ROWS = int(os.environ.get("PKD_CELLS_BCAST_ROWS", "1000000"))
+CELLS_BCAST_ROWS = 1_000_000
+# queries x occupied leaves per chunk of the skeleton bound in _next_radius
+# (an int64 corner-distance matrix of this many cells, ~8MB)
+RADIUS_CHUNK_CELLS = 1 << 20
 
 # phase profiler (diagnostic only): PKD_PROF=1 prints per-phase walls to
 # stderr — zero overhead when unset beyond a clock read per phase
@@ -140,6 +162,8 @@ def _prof(label: str, t0: float) -> float:
 
 RESULT_SCHEMA = "qid long, rn long, key long, doc_id string, span_idx long, dist2 long"
 STATS_SCHEMA = "qid long, rounds int, cand_rows long"
+# per-query result rows before the doc_id re-attach
+_FINAL_SCHEMA = "qid long, rn long, key long, span_idx long, dist2 long"
 
 # top-k entries are THREE LONGS — no doc_id string: (key, span_idx) is the
 # unique PointID, so (dist2, key, span_idx) is the same total order the
@@ -276,8 +300,12 @@ def _assign_levels(
     # snap DOWN to the even lattice (coarser: candidates grow <=4x at d=2,
     # cheap per the probe-vs-agg measurement; deeper would risk empty
     # neighborhoods and extra rounds)
-    lvl_deep = F.greatest(
-        (lvl_deep_raw - lvl_deep_raw % 2).cast("int"), F.lit(level_floor).cast("int")
+    # a query whose home leaf is unoccupied (no meta row) takes the
+    # index level, as in _assign_levels_np (both loops must agree);
+    # least/greatest skip nulls, so the null has to be kept explicitly
+    lvl_deep = F.when(
+        F.col("cnt").isNotNull(),
+        F.greatest((lvl_deep_raw - lvl_deep_raw % 2).cast("int"), F.lit(level_floor).cast("int")),
     )
     fallback = F.coalesce(lvl_deep, F.lit(max(level_floor, min(level_cap, L))))
     return out.select(
@@ -367,9 +395,10 @@ def _empty_cells_pdf() -> pd.DataFrame:
 def _resolved_cells(
     qpd: pd.DataFrame, d: int, coord_bits: int, L: int, meta: dict | None
 ) -> pd.DataFrame:
-    """Shell cells for each query's Chebyshev SHELL (r_prev, r] at its grid
-    ``level`` (r_prev = r//2; round 1 includes the home cell), RESOLVED
-    against the index skeleton ``meta`` (see SpatialIndex.meta_np):
+    """Shell cells for each query's Chebyshev SHELL (rp, r] at its grid
+    ``level`` (``rp`` is the previous round's radius, -1 in round 1 so the
+    home cell is included), RESOLVED against the index skeleton ``meta``
+    (see SpatialIndex.meta_np):
 
       * COARSE shells (level <= index_level L): each cell is replaced by
         the OCCUPIED level-L leaf cells beneath it -> rows (qid, -1, leaf).
@@ -389,18 +418,16 @@ def _resolved_cells(
     from .index import expand_ranges
 
     frames = []
-    for (level, r), grp in qpd.groupby(["level", "r"]):
-        level, r = int(level), int(r)
+    for (level, r, rp), grp in qpd.groupby(["level", "r", "rp"]):
+        level, r, rp = int(level), int(r), int(rp)
         # callers route meshes past MESH_CAP to the exhaustive branch
         assert d * math.log2(2 * r + 1) <= MESH_CAP_LOG2 + 1e-9
-        r_lo = 0 if r == 1 else r // 2  # exclusive inner radius of the shell
         w_shift = coord_bits - level
         gmax = (1 << level) - 1
         g = np.stack([grp[f"q{j}"].to_numpy(dtype=np.int64) >> w_shift for j in range(d)], axis=1)
         rng = np.arange(-r, r + 1)
         mesh = np.stack(np.meshgrid(*([rng] * d), indexing="ij"), axis=-1).reshape(-1, d)
-        cheb = np.abs(mesh).max(axis=1)
-        mesh = mesh[(cheb > r_lo) | (r == 1)] if r > 1 else mesh
+        mesh = mesh[np.abs(mesh).max(axis=1) > rp]
         cells = g[:, None, :] + mesh[None, :, :]  # (m, c, d)
         ok = ((cells >= 0) & (cells <= gmax)).all(axis=2)  # drop, don't clip
         m, c, _ = cells.shape
@@ -453,6 +480,117 @@ def _exh_cond(d: int):
     the query takes the exhaustive branch (shared by the branch split and
     the termination expression; both sides must agree row-for-row)."""
     return F.lit(float(d)) * F.log2(F.lit(2.0) * F.col("r") + F.lit(1.0)) > F.lit(MESH_CAP_LOG2)
+
+
+def _exh_np(r: np.ndarray, d: int) -> np.ndarray:
+    """numpy twin of _exh_cond (same float formula, so both agree)."""
+    return (d * np.log2(2.0 * r + 1.0)) > MESH_CAP_LOG2
+
+
+def _mesh_cap_r(d: int) -> int:
+    """Largest ring radius whose offset mesh stays within MESH_CAP."""
+    r = max(1, int((2.0 ** (MESH_CAP_LOG2 / d) - 1.0) // 2))
+    while not _exh_np(np.float64(r + 1), d):
+        r += 1
+    while r > 1 and _exh_np(np.float64(r), d):
+        r -= 1
+    return r
+
+
+def _ceil_isqrt(x: np.ndarray) -> np.ndarray:
+    """Exact ceil(sqrt(x)) for int64 x >= 0 (float estimate + correction)."""
+    x = x.astype(np.int64)
+    s = np.floor(np.sqrt(x.astype(np.float64))).astype(np.int64)
+    s -= (s * s > x).astype(np.int64)
+    s += ((s + 1) * (s + 1) <= x).astype(np.int64)
+    return s + (s * s < x).astype(np.int64)
+
+
+def _ring_of(dist2: np.ndarray, shift: np.ndarray) -> np.ndarray:
+    """Smallest ring r whose bound covers dist2: (r * 2^shift)^2 >= dist2."""
+    return (_ceil_isqrt(dist2) + (np.int64(1) << shift) - 1) >> shift
+
+
+def _kth_corner_dist2(q: np.ndarray, meta: dict, k: int) -> np.ndarray:
+    """Per query: the smallest D2 such that the occupied leaves whose
+    farthest bbox corner lies within sqrt(D2) of q hold at least k points
+    (-1 when the whole index holds fewer). Every point of a leaf lies in
+    its bbox, so k points are within that distance. Leaf counts enter as
+    min(cnt, k): the pruned candidate table keeps at least that many rows
+    per leaf. Chunked over queries: memory is RADIUS_CHUNK_CELLS cells."""
+    out = np.full(len(q), -1, dtype=np.int64)
+    cnt = np.minimum(np.diff(meta["cum"]), k).astype(np.int64)
+    m = len(cnt)
+    if not m or int(cnt.sum()) < k:
+        return out
+    mn, mx = meta["mn"], meta["mx"]
+    kk = min(k, m)  # each leaf holds >= 1 point: the answer is among the k nearest
+    step = max(1, RADIUS_CHUNK_CELLS // m)
+    for s in range(0, len(q), step):
+        qc = q[s : s + step]
+        far = np.zeros((len(qc), m), dtype=np.int64)
+        for j in range(q.shape[1]):
+            a = np.maximum(np.abs(qc[:, j : j + 1] - mn[:, j]), np.abs(qc[:, j : j + 1] - mx[:, j]))
+            far += a * a
+        idx = np.argpartition(far, kk - 1, axis=1)[:, :kk] if kk < m else np.broadcast_to(np.arange(m), far.shape)
+        fsel = np.take_along_axis(far, idx, axis=1)
+        order = np.argsort(fsel, axis=1)
+        fs = np.take_along_axis(fsel, order, axis=1)
+        cs = np.cumsum(cnt[np.take_along_axis(idx, order, axis=1)], axis=1)
+        hit = cs >= k
+        out[s : s + step] = np.where(hit[:, -1], fs[np.arange(len(qc)), hit.argmax(axis=1)], -1)
+    return out
+
+
+def _next_radius(
+    q: np.ndarray,
+    level: np.ndarray,
+    r: np.ndarray,
+    size: np.ndarray,
+    kth: np.ndarray,
+    k: int,
+    skeleton: dict | None,
+    coord_bits: int,
+) -> np.ndarray:
+    """Next ring radius of each pending query: the smallest ring the
+    evidence in hand proves sufficient (nn_search.hpp:121-123's bound).
+
+    * size >= k: r = ceil(ceil_isqrt(kth) / w) — after that ring
+      (r*w)^2 >= kth, and the carried kth can only shrink.
+    * size < k with a skeleton: the same from _kth_corner_dist2's bound,
+      which puts k points inside the ring; an index with fewer than k
+      points jumps straight to the grid-covering ring 2^level.
+    * size < k without a skeleton (meta past META_MEMO_CELLS): 2r.
+
+    Always at least r + 1 and at most 2^level (that ring already covers
+    the whole grid). A jump that would cross MESH_CAP where doubling would
+    not stops at the cap, so the exhaustive branch fires no earlier than
+    under doubling. Shared by both ring loops, so their rounds agree."""
+    level = level.astype(np.int64)
+    r = r.astype(np.int64)
+    shift = coord_bits - level
+    r_need = 2 * r
+    full = size >= k
+    if full.any():
+        r_need[full] = _ring_of(kth[full], shift[full])
+    part = ~full
+    if skeleton is not None and part.any():
+        d2 = _kth_corner_dist2(q[part], skeleton, k)
+        fit = _ring_of(np.maximum(d2, 0), shift[part])
+        r_need[part] = np.where(d2 >= 0, fit, np.int64(1) << level[part])
+    r_next = np.maximum(r + 1, np.minimum(r_need, np.int64(1) << level))
+    d = q.shape[1]
+    cross = _exh_np(r_next, d) & ~_exh_np(2 * r, d)
+    return np.where(cross, _mesh_cap_r(d), r_next).astype(np.int64)
+
+
+def _covered_frac(mnp: dict, leaves: np.ndarray) -> float:
+    """Share of the index's points under the given occupied leaves (exact
+    from the skeleton's prefix sums) — decides whether a scan is worth a
+    Morton-interval filter."""
+    i = np.searchsorted(mnp["cells"], np.unique(leaves))
+    total = int(mnp["cum"][-1])
+    return float((mnp["cum"][i + 1] - mnp["cum"][i]).sum()) / max(1, total)
 
 
 def _resolve_cells_spark(index, cells: DataFrame, d: int, L: int) -> DataFrame:
@@ -555,11 +693,6 @@ def _mesh_parts_local(
     lvl_counts = {int(lv): int(c) for lv, c in zip(uls, ucnts)}
     per_level_leaves = {int(lv): np.unique(ancv[lvlv == lv]) for lv in uls}
 
-    def _covered_frac(leaves: np.ndarray) -> float:
-        i = np.searchsorted(mnp["cells"], np.unique(leaves))
-        total = int(mnp["cum"][-1])
-        return float((mnp["cum"][i + 1] - mnp["cum"][i]).sum()) / max(1, total)
-
     def _local_cl(mask, rename: dict, cols: list[str], schema: str) -> DataFrame:
         sub = cells_pdf.loc[mask]
         if rename:
@@ -584,7 +717,7 @@ def _mesh_parts_local(
             cl = F.broadcast(cl)
         p = pts_narrow
         leaves = per_level_leaves[-1]
-        if _covered_frac(leaves) <= 0.4:
+        if _covered_frac(mnp, leaves) <= 0.4:
             pred = morton_interval_pred(leaves, leaf_shift)
             if pred is not None:
                 p = p.where(pred)
@@ -602,7 +735,7 @@ def _mesh_parts_local(
         all_leaves = np.unique(
             np.concatenate([per_level_leaves[lv] for lv in fine_levels])
         )
-        if _covered_frac(all_leaves) <= 0.4:
+        if _covered_frac(mnp, all_leaves) <= 0.4:
             pred = morton_interval_pred(all_leaves, leaf_shift)
             if pred is not None:
                 p = p.where(pred)
@@ -652,16 +785,55 @@ def _cand_estimate(cells_pdf: pd.DataFrame, mnp: dict, d: int, cb: int, L: int) 
     return int(occ.sum())
 
 
+def _dist2_col(d: int):
+    """Exact int64 squared L2 between a candidate (x..) and its query (q..)."""
+    dist2 = None
+    for j in range(d):
+        t = (F.col(f"x{j}") - F.col(f"q{j}")) * (F.col(f"x{j}") - F.col(f"q{j}"))
+        dist2 = t if dist2 is None else dist2 + t
+    return dist2
+
+
+def _candidate_points(index: SpatialIndex, k: int) -> DataFrame:
+    """Narrow candidate source: the join/top-k hot path never touches
+    doc_id. Duplicate-heavy indexes swap in the pruned (position-collapsed)
+    table — multiset-exact for this k (see SpatialIndex.pruned_points)."""
+    pts = index.pruned_points(k) or index.points
+    return pts.select("key", "span_idx", *[f"x{j}" for j in range(index.cfg.dims)], "morton")
+
+
+def _exhaustive_cand(pts_narrow: DataFrame, qside: DataFrame, d: int, cb: int, kb: int) -> DataFrame:
+    """Exhaustive-branch candidates (both loops): every point whose
+    Chebyshev cell distance at the query's level exceeds the already
+    scanned radius rp — one filtered cross join with the over-mesh query
+    side (qid, q.., level, rp), so shells stay disjoint. Drops morton like
+    the mesh parts (union schemas must agree)."""
+    cheb = None
+    for j in range(d):
+        t = F.abs(
+            F.expr(f"shiftrightunsigned(x{j}, CAST({cb} - level AS INT))")
+            - F.expr(f"shiftrightunsigned(q{j}, CAST({cb} - level AS INT))")
+        )
+        cheb = t if cheb is None else F.greatest(cheb, t)
+    return (
+        pts_narrow.crossJoin(qside)
+        .where(cheb > F.col("rp"))
+        .withColumn("pcell", F.expr(f"shiftrightunsigned(morton, CAST({d} * ({kb} - level) AS INT))"))
+        .drop("level", "rp", "morton")
+    )
+
+
 def _knn_driver(
     index: SpatialIndex,
     st: pd.DataFrame,
     k: int,
     max_rounds: int,
-    return_stats: bool,
     plan_log: list | None,
-):
-    """Small-batch kNN loop: shell resolution, top-k merge and ring
-    termination run ON THE DRIVER; Spark contributes exactly ONE
+    carried: pd.DataFrame | None = None,
+    first_round: int = 1,
+) -> tuple[pd.DataFrame, pd.DataFrame]:
+    """Driver ring loop: shell resolution, top-k merge, termination and the
+    next radius run ON THE DRIVER; Spark contributes exactly ONE
     candidate-collection job per ring round (scan + local-relation
     broadcast join + Arrow collect). Rounds whose metadata-estimated
     candidate volume exceeds DRIVER_COLLECT_MAX_ROWS reduce per-query
@@ -669,48 +841,52 @@ def _knn_driver(
     before collecting, so the driver never holds more than ~pend*k rows
     from such a round.
 
+    ``st`` holds one row per pending query (qid, q0.., level, r, rp, cnt)
+    and ``carried`` their running top-k entries (qid, dist2, key,
+    span_idx). knn() starts it at round 1 (r=1, rp=-1, nothing carried);
+    the distributed loop hands it its pending tail mid-batch
+    (``first_round`` > 1), so this loop is also that loop's tail reducer.
+
     Semantics are identical to the distributed loop by construction: the
     candidate multiset per round is the same join, the merge order is
-    (dist2, key, span_idx), and the termination rule is the same ring
-    lower bound ((r*w)^2 vs kth distance) plus the covered-mesh rule."""
+    (dist2, key, span_idx), the termination rule is the same ring lower
+    bound ((r*w)^2 vs kth distance) plus the covered-mesh rule, and the
+    next ring comes from the shared _next_radius.
+
+    Returns pandas result rows (qid, rn, key, span_idx, dist2) and stats
+    rows (qid, rounds, cand_rows) of the queries it finished."""
     spark = index.points.sparkSession
     cfg: EngineConfig = index.cfg
     d, kb, cb, L = cfg.dims, cfg.grid_bits, cfg.coord_bits, cfg.index_level
     qcols = [f"q{j}" for j in range(d)]
-    xcols = [f"x{j}" for j in range(d)]
     qschema = ", ".join(f"{q} long" for q in qcols)
     mnp = index.meta_np()
     total_pts = int(mnp["cum"][-1]) if len(mnp["cells"]) else 0
 
-    st = st.copy()
-    st["r"] = np.int64(1)
-    st["cnt"] = np.int64(0)
+    st = st[["qid", *qcols, "level", "r", "rp", "cnt"]].astype("int64").reset_index(drop=True)
     t0 = _time.time()
 
-    dist2 = None
-    for j in range(d):
-        t = (F.col(f"x{j}") - F.col(f"q{j}")) * (F.col(f"x{j}") - F.col(f"q{j}"))
-        dist2 = t if dist2 is None else dist2 + t
-    pts_base = index.pruned_points(k) or index.points
-    pts_narrow = pts_base.select("key", "span_idx", *xcols, "morton")
+    dist2 = _dist2_col(d)
+    pts_narrow = _candidate_points(index, k)
 
-    carried = pd.DataFrame(
-        {c: pd.Series(dtype="int64") for c in ("qid", "dist2", "key", "span_idx")}
-    )
+    entry_cols = ["qid", "dist2", "key", "span_idx"]
+    if carried is None:
+        carried = pd.DataFrame({c: pd.Series(dtype="int64") for c in entry_cols})
+    carried = carried[entry_cols].astype("int64").reset_index(drop=True)
     res_frames: list[pd.DataFrame] = []
     stats_frames: list[pd.DataFrame] = []
 
-    for rnd in range(1, max_rounds + 1):
+    for rnd in range(first_round, max_rounds + 1):
         if not len(st):
             break
         rv = st["r"].to_numpy(np.int64)
         lv = st["level"].to_numpy(np.int64)
-        exh = (d * np.log2(2.0 * rv + 1.0)) > MESH_CAP_LOG2
+        exh = _exh_np(rv, d)
         parts: list[DataFrame] = []
         lvl_counts: dict[int, int] = {}
         est = 0
         if (~exh).any():
-            sub = st.loc[~exh, ["qid", *qcols, "level", "r"]]
+            sub = st.loc[~exh, ["qid", *qcols, "level", "r", "rp"]]
             cells_pdf = _resolved_cells(sub, d, cb, L, mnp)
             cells_pdf = cells_pdf.merge(sub[["qid", *qcols]], on="qid")
             est += _cand_estimate(cells_pdf, mnp, d, cb, L)
@@ -718,27 +894,11 @@ def _knn_driver(
                 spark, cells_pdf, qcols, pts_narrow, d, kb, L, mnp
             )
         if bool(exh.any()):
-            ex = st.loc[exh, ["qid", *qcols, "level", "r"]]
+            ex = st.loc[exh, ["qid", *qcols, "level", "rp"]]
             exq = F.broadcast(
-                spark.createDataFrame(ex, schema=f"qid long, {qschema}, level int, r long")
+                spark.createDataFrame(ex, schema=f"qid long, {qschema}, level int, rp long")
             )
-            cheb = None
-            for j in range(d):
-                t = F.abs(
-                    F.expr(f"shiftrightunsigned(x{j}, CAST({cb} - level AS INT))")
-                    - F.expr(f"shiftrightunsigned(q{j}, CAST({cb} - level AS INT))")
-                )
-                cheb = t if cheb is None else F.greatest(cheb, t)
-            r_prev = F.when(F.col("r") == 1, F.lit(-1)).otherwise(F.col("r") / 2).cast("long")
-            parts.append(
-                pts_narrow.crossJoin(exq)
-                .where(cheb > r_prev)
-                .withColumn(
-                    "pcell",
-                    F.expr(f"shiftrightunsigned(morton, CAST({d} * ({kb} - level) AS INT))"),
-                )
-                .drop("level", "r", "morton")  # mesh parts drop morton too
-            )
+            parts.append(_exhaustive_cand(pts_narrow, exq, d, cb, kb))
             est += int(exh.sum()) * total_pts
         new_sizes = None
         if parts:
@@ -829,57 +989,66 @@ def _knn_driver(
         ring = (rv << (cb - lv)).astype(np.int64) ** 2
         covered = exh | ((2 * rv + 1) >= (np.int64(2) << lv))
         done = ((sizes >= k) & (kth >= 0) & (kth <= ring)) | (covered & (sizes > 0))
-        dropm = covered & (sizes == 0)
+        live = ~done & ~(covered & (sizes == 0))
         done_q = st.loc[done, "qid"].to_numpy(np.int64)
         if done_q.size and len(allv):
             dmask = np.isin(allv["qid"].to_numpy(np.int64), done_q)
             resf = allv.loc[dmask, ["qid", "key", "span_idx", "dist2"]].copy()
             resf["rn"] = (pos[dmask] + 1).astype(np.int64)
             res_frames.append(resf)
-            if return_stats:
-                stf = st.loc[done, ["qid", "cnt"]].copy()
-                stf["rounds"] = np.int32(rnd)
-                stats_frames.append(stf)
-        st = st.loc[~done & ~dropm].copy()
-        if not len(st):
+            stf = st.loc[done, ["qid", "cnt"]].copy()
+            stf["rounds"] = np.int32(rnd)
+            stats_frames.append(stf)
+        nxt = st.loc[live].copy()
+        if not len(nxt):
             break
-        keep_q = st["qid"].to_numpy(np.int64)
         if len(allv):
-            cmask = np.isin(allv["qid"].to_numpy(np.int64), keep_q)
-            carried = allv.loc[cmask, ["qid", "dist2", "key", "span_idx"]].reset_index(drop=True)
-        st["r"] = st["r"].to_numpy(np.int64) * 2
+            cmask = np.isin(allv["qid"].to_numpy(np.int64), nxt["qid"].to_numpy(np.int64))
+            carried = allv.loc[cmask, entry_cols].reset_index(drop=True)
+        nxt["rp"] = rv[live]
+        nxt["r"] = _next_radius(
+            nxt[qcols].to_numpy(np.int64), lv[live], rv[live], sizes[live], kth[live], k, mnp, cb
+        )
+        st = nxt
 
-    if not res_frames:
-        empty = spark.createDataFrame([], schema=RESULT_SCHEMA)
-        return (empty, spark.createDataFrame([], schema=STATS_SCHEMA)) if return_stats else empty
-    allres = pd.concat(res_frames, ignore_index=True)
-    final = spark.createDataFrame(
-        allres[["qid", "rn", "key", "span_idx", "dist2"]].astype("int64"),
-        schema="qid long, rn long, key long, span_idx long, dist2 long",
+    res_cols = ["qid", "rn", "key", "span_idx", "dist2"]
+    res = (
+        pd.concat(res_frames, ignore_index=True)[res_cols].astype("int64")
+        if res_frames else pd.DataFrame({c: pd.Series(dtype="int64") for c in res_cols})
     )
-    res_keys = spark.createDataFrame(
-        pd.DataFrame({"key": np.unique(allres["key"].to_numpy(np.int64))}), schema="key long"
+    stats = (
+        pd.concat(stats_frames, ignore_index=True).rename(columns={"cnt": "cand_rows"})
+        if stats_frames else pd.DataFrame({"qid": [], "rounds": [], "cand_rows": []})
     )
+    stats = stats[["qid", "rounds", "cand_rows"]].astype(
+        {"qid": "int64", "rounds": "int32", "cand_rows": "int64"}
+    )
+    return res, stats
+
+
+def _empty_result(spark, return_stats: bool):
+    empty = spark.createDataFrame([], schema=RESULT_SCHEMA)
+    return (empty, spark.createDataFrame([], schema=STATS_SCHEMA)) if return_stats else empty
+
+
+def _with_doc_ids(index: SpatialIndex, final: DataFrame, res_keys: DataFrame) -> DataFrame:
+    """doc_id re-attach shared by both loops. key -> doc_id is FUNCTIONAL
+    by construction (the loader derives key from doc_id, documents.py:162;
+    update batches shift unique keys, preserving the dependence), but (key,
+    span_idx) is NOT a unique row id — fixtures carry duplicate spans — so
+    the join is on key against the DISTINCT (key, doc_id) projection,
+    NARROWED first by a broadcast semi-join on the <= nq*k result keys: r4
+    ran dropDuplicates over the FULL points table per batch (a full-table
+    shuffle to decorate a tiny result — 2.6s at 38.4M); now only the
+    semi-filtered handful of rows reaches the distinct."""
     ids = (
         index.points.select("key", "doc_id")
         .join(F.broadcast(res_keys), "key", "leftsemi")
         .dropDuplicates(["key"])
     )
-    out = final.hint("shuffle_hash").join(ids, "key").select(
+    return final.hint("shuffle_hash").join(ids, "key").select(
         "qid", "rn", "key", "doc_id", "span_idx", "dist2"
     )
-    if return_stats:
-        if stats_frames:
-            spd = pd.concat(stats_frames, ignore_index=True)
-            spd = spd.rename(columns={"cnt": "cand_rows"})[["qid", "rounds", "cand_rows"]]
-            stats = spark.createDataFrame(
-                spd.astype({"qid": "int64", "rounds": "int32", "cand_rows": "int64"}),
-                schema=STATS_SCHEMA,
-            )
-        else:
-            stats = spark.createDataFrame([], schema=STATS_SCHEMA)
-        return out, stats
-    return out
 
 
 def knn(
@@ -954,8 +1123,7 @@ def knn(
         t0 = _prof("driver_probe", t0)
     if qpd0 is not None:
         if qpd0.empty:
-            empty = spark.createDataFrame([], schema=RESULT_SCHEMA)
-            return (empty, spark.createDataFrame([], schema=STATS_SCHEMA)) if return_stats else empty
+            return _empty_result(spark, return_stats)
         st = qpd0.astype("int64")
         if adaptive:
             st["level"] = _assign_levels_np(
@@ -963,13 +1131,21 @@ def knn(
             )
         else:
             st["level"] = np.int64(level)
+        st["r"], st["rp"], st["cnt"] = np.int64(1), np.int64(-1), np.int64(0)
         t0 = _prof("assign_levels_np", t0)
-        return _knn_driver(index, st, k, max_rounds, return_stats, plan_log)
+        res, stats = _knn_driver(index, st, k, max_rounds, plan_log)
+        if not len(res):
+            return _empty_result(spark, return_stats)
+        final = spark.createDataFrame(res, schema=_FINAL_SCHEMA)
+        res_keys = spark.createDataFrame(
+            pd.DataFrame({"key": np.unique(res["key"].to_numpy(np.int64))}), schema="key long"
+        )
+        out = _with_doc_ids(index, final, res_keys)
+        return (out, spark.createDataFrame(stats, schema=STATS_SCHEMA)) if return_stats else out
 
     if isinstance(queries, pd.DataFrame):
         if queries.empty:
-            empty = spark.createDataFrame([], schema=RESULT_SCHEMA)
-            return (empty, spark.createDataFrame([], schema=STATS_SCHEMA)) if return_stats else empty
+            return _empty_result(spark, return_stats)
         qdf = spark.createDataFrame(queries[["qid"] + qcols])
     else:
         qdf = queries.select("qid", *qcols)
@@ -989,6 +1165,7 @@ def knn(
     empty_tk = F.expr(f"CAST(array() AS {_ENTRY_ARR})")
     pend = _ckpt(
         qdf.withColumn("r", F.lit(1).cast("long"))
+        .withColumn("rp", F.lit(-1).cast("long"))
         .withColumn("tk", empty_tk)
         .withColumn("cnt", F.lit(0).cast("long"))
     )
@@ -998,21 +1175,15 @@ def knn(
     n_pend, n_exh = int(row["n"]), int(row["ne"] or 0)
     t0 = _prof("pend_init", t0)
 
-    dist2 = None
-    for j in range(d):
-        t = (F.col(f"x{j}") - F.col(f"q{j}")) * (F.col(f"x{j}") - F.col(f"q{j}"))
-        dist2 = t if dist2 is None else dist2 + t
-    # narrow candidate source: the join/top-k hot path never touches doc_id.
-    # Duplicate-heavy indexes swap in the pruned (position-collapsed) table
-    # — multiset-exact for this k (see SpatialIndex.pruned_points).
-    xcols = [f"x{j}" for j in range(d)]
-    pts_base = index.pruned_points(k) or index.points
-    pts_narrow = pts_base.select("key", "span_idx", *xcols, "morton")
+    dist2 = _dist2_col(d)
+    pts_narrow = _candidate_points(index, k)
     t0 = _prof("pruned_points", t0)
 
     L = cfg.index_level
     mnp = index.meta_np()
-    # ship the skeleton once per batch (not per task closure): rounds share it
+    # ship the skeleton once per batch (not per task closure): rounds share
+    # it; destroyed after the loop (every consumer runs inside an eager
+    # checkpoint)
     bc_meta = spark.sparkContext.broadcast(mnp) if mnp is not None else None
 
     def _gen_cells(batches):
@@ -1021,6 +1192,32 @@ def knn(
             if len(pdf):
                 yield _resolved_cells(pdf, d, cb, L, meta)
 
+    def _radius_batches(batches):
+        # next ring of every pending row of a round frame (Arrow in and
+        # out: the carried top-k column passes through untouched)
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        meta = bc_meta.value if bc_meta is not None else None
+        for b in batches:
+            def col(c):
+                return b.column(c).to_numpy(zero_copy_only=False)
+
+            r = col("r").astype(np.int64)
+            r_next = r.copy()
+            live = ~(col("_done") | col("_drop"))
+            if live.any():
+                q = np.stack([col(c) for c in qcols], axis=1).astype(np.int64)
+                size = pc.list_value_length(b.column("tk_m")).to_numpy(zero_copy_only=False)
+                kth = pc.fill_null(b.column("kth"), -1).to_numpy(zero_copy_only=False)
+                r_next[live] = _next_radius(
+                    q[live], col("level")[live], r[live], size[live].astype(np.int64),
+                    kth[live].astype(np.int64), k, meta, cb,
+                )
+            yield pa.RecordBatch.from_arrays(
+                [*b.columns, pa.array(r_next, type=pa.int64())], names=[*b.schema.names, "r_next"]
+            )
+
     # bytes-aware broadcast limits (rows): see BROADCAST_BYTES / CELLS_BCAST_ROWS notes above
     cells_bcast_rows = min(CELLS_BCAST_ROWS, BROADCAST_BYTES // 24)
     qside_bcast_rows = BROADCAST_BYTES // (8 * (d + 3))
@@ -1028,9 +1225,27 @@ def knn(
 
     result_parts: list[DataFrame] = []
     stats_parts: list[DataFrame] = []
+    tail_res = tail_stats = None
 
     for rnd in range(1, max_rounds + 1):
         if n_pend == 0:
+            break
+        if mnp is not None and n_pend <= DRIVER_CELLS_MAX_QUERIES:
+            # hand-off: the pending tail fits the driver loop — ONE collect
+            # of its state (rings, counts, carried top-k exploded to one
+            # row per entry) and _knn_driver finishes it from this round
+            ent = F.col("s")
+            state = pend.select(
+                "qid", *qcols, "level", "r", "rp", "cnt", F.explode_outer("tk").alias("s")
+            ).select(
+                "qid", *qcols, "level", "r", "rp", "cnt", ent.isNotNull().alias("_has"),
+                *[F.coalesce(ent[c], F.lit(0)).cast("long").alias(c) for c in ("dist2", "key", "span_idx")],
+            ).toPandas()
+            t0 = _prof(f"r{rnd}_handoff_collect", t0)
+            tail_res, tail_stats = _knn_driver(
+                index, state.drop_duplicates("qid"), k, max_rounds, plan_log,
+                carried=state.loc[state["_has"]], first_round=rnd,
+            )
             break
         exh = _exh_cond(d)
         branches: list[DataFrame] = []
@@ -1045,32 +1260,19 @@ def knn(
         # and re-scanned the full table for rounds >= 2 stragglers — the
         # measured scale-killer (25.3s of a ~70s varden round at 38.4M).
         raw_cells = None
-        cells_pdf = None  # driver-resolved shell cells (small pending sets)
         if n_exh < n_pend:
             mesh_pend = pend.where(~exh)
-            use_driver = mnp is not None and (n_pend - n_exh) <= DRIVER_CELLS_MAX_QUERIES
-            if use_driver:
-                # driver path: ONE small Arrow collect of the pending slice,
-                # numpy shell resolution, and local-relation broadcasts —
-                # no executor Python workers, no cells persist, and the
-                # per-level leaf/count stats come from pandas instead of a
-                # dedicated collect job per round
-                qpd = mesh_pend.select("qid", *qcols, "level", "r").toPandas()
-                cells_pdf = _resolved_cells(qpd, d, cb, L, mnp)
-                # attach the query coordinates here so the candidate join
-                # needs no separate qside join at all
-                cells_pdf = cells_pdf.merge(qpd[["qid", *qcols]], on="qid")
-            else:
-                cells = mesh_pend.select("qid", *qcols, "level", "r").mapInPandas(
-                    _gen_cells, schema="qid long, lvl int, cell long"
-                )
-                if mnp is None:
-                    # meta too large for the driver memo: resolve shells via
-                    # the meta-side join instead of reverting to the full
-                    # points explode (r4's at-scale fallback defect)
-                    raw_cells = cells.persist()
-                    cells = _resolve_cells_spark(index, raw_cells, d, L)
-                cells = cells.persist()
+            cells = mesh_pend.select("qid", *qcols, "level", "r", "rp").mapInPandas(
+                _gen_cells, schema="qid long, lvl int, cell long"
+            )
+            if mnp is None:
+                # meta too large for the driver memo: resolve shells via
+                # the meta-side join instead of reverting to the full
+                # points explode (r4's at-scale fallback defect)
+                raw_cells = cells.persist()
+                cells = _resolve_cells_spark(index, raw_cells, d, L)
+            cells = cells.persist()
+
             # Per-LEVEL scan pruning: collect each level's DISTINCT leaf
             # ancestors (bounded by the skeleton size, never the shell-cell
             # count) and, where a level's leaves hold a minority of the
@@ -1080,8 +1282,7 @@ def knn(
             # inputs the cluster queries' deep levels touch only hot
             # leaves, so their scans are nearly free; only levels whose
             # leaves span most of the table share one full explode scan.
-            # Straggler rounds >= 2 prune everything the same way. r3
-            # instead exploded ALL n rows over EVERY distinct level.
+            # r3 instead exploded ALL n rows over EVERY distinct level.
             # ONE driver action serves both the per-level shell-cell
             # counts and the leaf sets: group by (lvl, leaf-ancestor) —
             # bounded by skeleton x levels, never by shell-cell count —
@@ -1089,119 +1290,101 @@ def knn(
             # full distinct+collect over the shell table every round).
             mesh_parts: list[DataFrame] = []
             lvl_counts: dict[int, int] = {}
-            if cells_pdf is not None:
-                # driver-resolved straggler round: local cell relations with
-                # coords folded in, no Spark stats job (shared helper with
-                # the small-batch loop)
-                mesh_parts, lvl_counts = _mesh_parts_local(
-                    spark, cells_pdf, qcols, pts_narrow, d, kb, L, mnp
+            per_level_leaves: dict[int, np.ndarray] | None = None
+            grouped = None
+            if mnp is not None:
+                anc = F.when(F.col("lvl") < 0, F.col("cell")).otherwise(
+                    F.expr(f"shiftrightunsigned(cell, CAST({d} * (lvl - {L}) AS INT))")
                 )
-                t0 = _prof(f"r{rnd}_cells_collect", t0)
-            else:
-                per_level_leaves: dict[int, np.ndarray] | None = None
-                grouped = None
-                if mnp is not None:
-                    anc = F.when(F.col("lvl") < 0, F.col("cell")).otherwise(
-                        F.expr(f"shiftrightunsigned(cell, CAST({d} * (lvl - {L}) AS INT))")
-                    )
-                    grouped = (
-                        cells.groupBy("lvl", anc.alias("leaf"))
-                        .agg(F.count(F.lit(1)).alias("n"))
-                        .limit(LEAF_COLLECT_CAP + 1)
-                        .collect()
-                    )
-                    if len(grouped) <= LEAF_COLLECT_CAP:
-                        acc: dict[int, list] = {}
-                        for r2 in grouped:
-                            lv = int(r2["lvl"])
-                            lvl_counts[lv] = lvl_counts.get(lv, 0) + int(r2["n"])
-                            acc.setdefault(lv, []).append(r2["leaf"])
-                        per_level_leaves = {
-                            lv: np.array(ls, dtype=np.int64) for lv, ls in acc.items()
-                        }
-                    else:
-                        grouped = None  # overflow: fall through to the lvl-only agg
-                if grouped is None:
-                    lvl_counts = {
-                        int(r2["lvl"]): int(r2["n"])
-                        for r2 in cells.groupBy("lvl").agg(F.count(F.lit(1)).alias("n")).collect()
+                grouped = (
+                    cells.groupBy("lvl", anc.alias("leaf"))
+                    .agg(F.count(F.lit(1)).alias("n"))
+                    .limit(LEAF_COLLECT_CAP + 1)
+                    .collect()
+                )
+                if len(grouped) <= LEAF_COLLECT_CAP:
+                    acc: dict[int, list] = {}
+                    for r2 in grouped:
+                        lv = int(r2["lvl"])
+                        lvl_counts[lv] = lvl_counts.get(lv, 0) + int(r2["n"])
+                        acc.setdefault(lv, []).append(r2["leaf"])
+                    per_level_leaves = {
+                        lv: np.array(ls, dtype=np.int64) for lv, ls in acc.items()
                     }
-                t0 = _prof(f"r{rnd}_cells_collect", t0)
-                n_coarse = lvl_counts.get(-1, 0)
-                fine_levels = sorted(l for l in lvl_counts if l >= 0)
+                else:
+                    grouped = None  # overflow: fall through to the lvl-only agg
+            if grouped is None:
+                lvl_counts = {
+                    int(r2["lvl"]): int(r2["n"])
+                    for r2 in cells.groupBy("lvl").agg(F.count(F.lit(1)).alias("n")).collect()
+                }
+            t0 = _prof(f"r{rnd}_cells_collect", t0)
+            n_coarse = lvl_counts.get(-1, 0)
+            fine_levels = sorted(l for l in lvl_counts if l >= 0)
 
-                def _covered_frac(leaves: np.ndarray) -> float:
-                    i = np.searchsorted(mnp["cells"], np.unique(leaves))
-                    total = int(mnp["cum"][-1])
-                    return float((mnp["cum"][i + 1] - mnp["cum"][i]).sum()) / max(1, total)
+            def _scan(leaves: np.ndarray | None) -> DataFrame:
+                if leaves is None or _covered_frac(mnp, leaves) > 0.4:
+                    return pts_narrow
+                return pts_narrow.where(morton_interval_pred(leaves, leaf_shift))
 
-                def _scan(leaves: np.ndarray | None) -> DataFrame:
-                    if leaves is None or _covered_frac(leaves) > 0.4:
-                        return pts_narrow
-                    return pts_narrow.where(morton_interval_pred(leaves, leaf_shift))
-
-                if n_coarse:
-                    cl = cells.where(F.col("lvl") < 0).select("qid", F.col("cell").alias("leaf"))
-                    if n_coarse <= cells_bcast_rows:
-                        cl = F.broadcast(cl)
-                    p = _scan(None if per_level_leaves is None else per_level_leaves.get(-1))
-                    p = p.withColumn("pcell", F.shiftrightunsigned("morton", leaf_shift))
-                    mesh_parts.append(p.join(cl, F.col("pcell") == F.col("leaf")).drop("leaf", "morton"))
-                shared_levels: list[int] = []
-                for lvl in fine_levels:
-                    leaves = None if per_level_leaves is None else per_level_leaves.get(lvl)
-                    if leaves is None or _covered_frac(leaves) > 0.4:
-                        shared_levels.append(lvl)
-                        continue
-                    cl = cells.where(F.col("lvl") == lvl).select("qid", "cell")
-                    if lvl_counts[lvl] <= cells_bcast_rows:
-                        cl = F.broadcast(cl)
-                    p = pts_narrow.where(morton_interval_pred(leaves, leaf_shift)).withColumn(
-                        "pcell", F.shiftrightunsigned("morton", d * (kb - lvl))
-                    )
-                    mesh_parts.append(p.join(cl, F.col("pcell") == F.col("cell")).drop("cell", "morton"))
-                if shared_levels:
-                    cl = cells.where(F.col("lvl").isin(shared_levels)).select(
-                        "qid", F.col("lvl").alias("clvl"), "cell"
-                    )
-                    if sum(lvl_counts[lv] for lv in shared_levels) <= cells_bcast_rows:
-                        cl = F.broadcast(cl)
-                    # foldable literal level array (codegen hoists it); the
-                    # cell is column arithmetic AFTER the explode — an
-                    # array-of-structs here allocates per ROW (GC-bound
-                    # floor at 38.4M pts)
-                    p = pts_narrow.select(
-                        "*",
-                        F.explode(
-                            F.array(*[F.lit(int(lvl)).cast("int") for lvl in shared_levels])
-                        ).alias("plvl"),
-                    ).withColumn(
-                        "pcell",
-                        F.expr(f"shiftrightunsigned(morton, CAST({d} * ({kb} - plvl) AS INT))"),
-                    )
-                    mesh_parts.append(
-                        p.join(
-                            cl, (F.col("plvl") == F.col("clvl")) & (F.col("pcell") == F.col("cell"))
-                        ).drop("clvl", "cell", "plvl", "morton")
-                    )
+            if n_coarse:
+                cl = cells.where(F.col("lvl") < 0).select("qid", F.col("cell").alias("leaf"))
+                if n_coarse <= cells_bcast_rows:
+                    cl = F.broadcast(cl)
+                p = _scan(None if per_level_leaves is None else per_level_leaves.get(-1))
+                p = p.withColumn("pcell", F.shiftrightunsigned("morton", leaf_shift))
+                mesh_parts.append(p.join(cl, F.col("pcell") == F.col("leaf")).drop("leaf", "morton"))
+            shared_levels: list[int] = []
+            for lvl in fine_levels:
+                leaves = None if per_level_leaves is None else per_level_leaves.get(lvl)
+                if leaves is None or _covered_frac(mnp, leaves) > 0.4:
+                    shared_levels.append(lvl)
+                    continue
+                cl = cells.where(F.col("lvl") == lvl).select("qid", "cell")
+                if lvl_counts[lvl] <= cells_bcast_rows:
+                    cl = F.broadcast(cl)
+                p = pts_narrow.where(morton_interval_pred(leaves, leaf_shift)).withColumn(
+                    "pcell", F.shiftrightunsigned("morton", d * (kb - lvl))
+                )
+                mesh_parts.append(p.join(cl, F.col("pcell") == F.col("cell")).drop("cell", "morton"))
+            if shared_levels:
+                cl = cells.where(F.col("lvl").isin(shared_levels)).select(
+                    "qid", F.col("lvl").alias("clvl"), "cell"
+                )
+                if sum(lvl_counts[lv] for lv in shared_levels) <= cells_bcast_rows:
+                    cl = F.broadcast(cl)
+                # foldable literal level array (codegen hoists it); the
+                # cell is column arithmetic AFTER the explode — an
+                # array-of-structs here allocates per ROW (GC-bound
+                # floor at 38.4M pts)
+                p = pts_narrow.select(
+                    "*",
+                    F.explode(
+                        F.array(*[F.lit(int(lvl)).cast("int") for lvl in shared_levels])
+                    ).alias("plvl"),
+                ).withColumn(
+                    "pcell",
+                    F.expr(f"shiftrightunsigned(morton, CAST({d} * ({kb} - plvl) AS INT))"),
+                )
+                mesh_parts.append(
+                    p.join(
+                        cl, (F.col("plvl") == F.col("clvl")) & (F.col("pcell") == F.col("cell"))
+                    ).drop("clvl", "cell", "plvl", "morton")
+                )
             if mesh_parts:
                 mesh_cand = mesh_parts[0]
                 for mp in mesh_parts[1:]:
                     mesh_cand = mesh_cand.unionByName(mp)
                 # count BEFORE the 1:1 qside attach (same cardinality per qid)
                 cnt_parts.append(mesh_cand.select("qid"))
-                if cells_pdf is None:
-                    # distributed path: query coords arrive via a qside join;
-                    # the driver path folded them into the cell relations
-                    qside = mesh_pend.select("qid", *qcols)
-                    if n_pend - n_exh <= qside_bcast_rows:
-                        qside = F.broadcast(qside)
-                    mesh_cand = mesh_cand.join(qside, "qid")
-                branches.append(mesh_cand)
+                qside = mesh_pend.select("qid", *qcols)
+                if n_pend - n_exh <= qside_bcast_rows:
+                    qside = F.broadcast(qside)
+                branches.append(mesh_cand.join(qside, "qid"))
 
         # --- exhaustive branch: filtered full scan for over-mesh queries ---
         if n_exh > 0:
-            exh_pend = pend.where(exh).select("qid", *qcols, "level", "r")
+            exh_pend = pend.where(exh).select("qid", *qcols, "level", "rp")
             if n_exh <= qside_bcast_rows:
                 exh_pend = F.broadcast(exh_pend)
             else:
@@ -1209,22 +1392,7 @@ def knn(
                 # become a partitioned CartesianProduct, never a Broadcast
                 # NestedLoop with a multi-GB build side (VERDICT r6 #5)
                 exh_pend = exh_pend.hint("shuffle_replicate_nl")
-            # Chebyshev cell distance beyond the already-scanned radius
-            # r_prev = r//2 (shells stay disjoint + exhaustive)
-            cheb = None
-            for j in range(d):
-                t = F.abs(
-                    F.expr(f"shiftrightunsigned(x{j}, CAST({cb} - level AS INT))")
-                    - F.expr(f"shiftrightunsigned(q{j}, CAST({cb} - level AS INT))")
-                )
-                cheb = t if cheb is None else F.greatest(cheb, t)
-            r_prev = F.when(F.col("r") == 1, F.lit(-1)).otherwise(F.col("r") / 2).cast("long")
-            exh_cand = (
-                pts_narrow.crossJoin(exh_pend)
-                .where(cheb > r_prev)
-                .withColumn("pcell", F.expr(f"shiftrightunsigned(morton, CAST({d} * ({kb} - level) AS INT))"))
-                .drop("level", "r", "morton")  # mesh parts drop morton too: union schemas must agree
-            )
+            exh_cand = _exhaustive_cand(pts_narrow, exh_pend, d, cb, kb)
             branches.append(exh_cand)
             cnt_parts.append(exh_cand.select("qid"))
 
@@ -1292,14 +1460,15 @@ def knn(
 
         # termination as COLUMN expressions over pend ⋈ round-stats: merge
         # the carried top-k with this shell's, then apply the ring lower
-        # bound (r*w)^2 vs kth distance (nn_search.hpp:121-123). ONE eager
-        # checkpoint materializes the round; results and the next pending
-        # set derive from it lazily (heavy join runs once; 3 driver
-        # actions/round independent of query count).
+        # bound (r*w)^2 vs kth distance (nn_search.hpp:121-123). The next
+        # ring of every pending row (_next_radius, an Arrow map over the
+        # same frame) folds into the round's ONE eager checkpoint; results
+        # and the next pending set derive from it lazily (heavy join runs
+        # once; 3 driver actions/round independent of query count).
         merged = F.slice(
             F.array_sort(F.concat(F.col("tk"), F.coalesce(F.col("tk_new"), empty_tk))), 1, k
         )
-        j = (
+        jn = (
             jbase
             .withColumn("tk_m", merged)
             .withColumn("cnt_m", F.col("cnt") + F.coalesce(F.col("c_new"), F.lit(0)))
@@ -1328,8 +1497,13 @@ def knn(
                 | (F.col("_covered") & (F.size("tk_m") > 0)),
             )
             .withColumn("_drop", F.col("_covered") & (F.size("tk_m") == 0))
+            .select("qid", *qcols, "level", "r", "tk_m", "cnt_m", "kth", "_done", "_drop")
         )
-        j = _ckpt(j)
+        j = _ckpt(
+            jn.mapInArrow(
+                _radius_batches, T.StructType(jn.schema.fields + [T.StructField("r_next", T.LongType())])
+            )
+        )
         t0 = _prof(f"r{rnd}_round_ckpt", t0)
 
         res_round = j.where("_done").select(
@@ -1341,7 +1515,7 @@ def knn(
             stats_parts.append(res_round.select("qid", "rounds", "cand_rows"))
 
         pend = j.where("NOT _done AND NOT _drop").select(
-            "qid", *qcols, "level", (F.col("r") * 2).alias("r"),
+            "qid", *qcols, "level", F.col("r_next").alias("r"), F.col("r").alias("rp"),
             F.col("tk_m").alias("tk"), F.col("cnt_m").alias("cnt"),
         )
         row = pend.agg(
@@ -1354,37 +1528,32 @@ def knn(
         if raw_cells is not None:
             raw_cells.unpersist()
 
-    if not result_parts:
-        empty = spark.createDataFrame([], schema=RESULT_SCHEMA)
-        return (empty, spark.createDataFrame([], schema=STATS_SCHEMA)) if return_stats else empty
-    allres = result_parts[0]
-    for p in result_parts[1:]:
-        allres = allres.unionByName(p)
-    # doc_id re-attach: key -> doc_id is FUNCTIONAL by construction (the
-    # loader derives key from doc_id, documents.py:162; update batches
-    # shift unique keys, preserving the dependence), but (key, span_idx)
-    # is NOT a unique row id — fixtures carry duplicate spans — so the
-    # join is on key against the DISTINCT (key, doc_id) projection,
-    # NARROWED first by a broadcast semi-join on the <= nq*k result keys:
-    # r4 ran dropDuplicates over the FULL points table per batch (a
-    # full-table shuffle to decorate a tiny result — 2.6s at 38.4M); now
-    # only the semi-filtered handful of rows reaches the distinct.
-    final = allres.select("qid", F.posexplode("tk").alias("pos", "s")).select(
-        "qid",
-        (F.col("pos") + 1).cast("long").alias("rn"),
-        F.col("s.key").alias("key"),
-        F.col("s.span_idx").cast("long").alias("span_idx"),
-        F.col("s.dist2").alias("dist2"),
-    )
-    res_keys = final.select("key").distinct()
-    ids = (
-        index.points.select("key", "doc_id")
-        .join(F.broadcast(res_keys), "key", "leftsemi")
-        .dropDuplicates(["key"])
-    )
-    out = final.hint("shuffle_hash").join(ids, "key").select(
-        "qid", "rn", "key", "doc_id", "span_idx", "dist2"
-    )
+    if bc_meta is not None:
+        bc_meta.destroy()
+    finals: list[DataFrame] = []
+    if result_parts:
+        allres = result_parts[0]
+        for p in result_parts[1:]:
+            allres = allres.unionByName(p)
+        finals.append(
+            allres.select("qid", F.posexplode("tk").alias("pos", "s")).select(
+                "qid",
+                (F.col("pos") + 1).cast("long").alias("rn"),
+                F.col("s.key").alias("key"),
+                F.col("s.span_idx").cast("long").alias("span_idx"),
+                F.col("s.dist2").alias("dist2"),
+            )
+        )
+    if tail_res is not None and len(tail_res):
+        finals.append(spark.createDataFrame(tail_res, schema=_FINAL_SCHEMA))
+        if return_stats:
+            stats_parts.append(spark.createDataFrame(tail_stats, schema=STATS_SCHEMA))
+    if not finals:
+        return _empty_result(spark, return_stats)
+    final = finals[0]
+    for p in finals[1:]:
+        final = final.unionByName(p)
+    out = _with_doc_ids(index, final, final.select("key").distinct())
     if return_stats:
         stats = stats_parts[0]
         for p in stats_parts[1:]:

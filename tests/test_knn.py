@@ -235,3 +235,129 @@ def test_knn_cells_join_over_gate_equivalence(spark, cfg, index_varden):
             b, sb = _sorted(res_b), st_b.toPandas().sort_values("qid").reset_index(drop=True)
     pd.testing.assert_frame_equal(a, b)
     pd.testing.assert_frame_equal(sa, sb)
+
+
+# ---------------------------------------------------------------------------
+# bound-driven rings: two rounds per query, and the distributed loop's
+# hand-off to the driver loop
+# ---------------------------------------------------------------------------
+
+_EDGE = (1 << 20) - 1  # last grid coordinate (coord_bits = 20)
+
+
+def _adversarial_queries() -> pd.DataFrame:
+    """In-distribution fixtures plus out-of-distribution and off-grid
+    queries (grid corners and edges beyond the data domain, whose outer
+    shells fall off the grid)."""
+    extra = pd.DataFrame(
+        {
+            "qid": [1000, 1001, 1002, 1003, 1004, 1005],
+            "q0": [0, _EDGE, 0, _EDGE, 500_001, 999_999],
+            "q1": [0, _EDGE, _EDGE, 3, 1, 0],
+        }
+    )
+    return pd.concat([FX.knn_fixtures(24, 2), extra], ignore_index=True)
+
+
+def _dist2_lists(pts: pd.DataFrame, queries: pd.DataFrame, k: int) -> dict[int, list[int]]:
+    px = pts[["x0", "x1"]].to_numpy(dtype=np.int64)
+    return {
+        int(r.qid): np.sort(((px - np.array([r.q0, r.q1])) ** 2).sum(axis=1))[:k].tolist()
+        for r in queries.itertuples()
+    }
+
+
+@pytest.fixture(scope="module")
+def dup_index(spark, cfg):
+    """All-duplicate index: every point at one position."""
+    from pyspark.sql import functions as F
+    from pkd_tree_spark.documents import load_points
+    from pkd_tree_spark.index import SpatialIndex
+
+    pts = load_points(spark, "/root/testdata/sf0.001", dims=2, dist="uniform").select(
+        "doc_id", "span_idx", "key", F.lit(123_457).cast("long").alias("x0"),
+        F.lit(654_321).cast("long").alias("x1"),
+    )
+    return SpatialIndex.build(pts, cfg), pts.select("x0", "x1").toPandas()
+
+
+@pytest.mark.parametrize("loop", ["driver", "distributed"])
+@pytest.mark.parametrize("which", ["varden", "uniform", "dup"])
+def test_knn_rounds_at_most_two(request, loop, which):
+    """Every query finishes within two ring rounds — the next ring is the
+    one the round-1 evidence proves sufficient — on both loops, and the
+    per-query neighbor distances equal a numpy brute force."""
+    import unittest.mock as mock
+
+    import pkd_tree_spark.knn as K
+
+    if which == "dup":
+        idx, pts = request.getfixturevalue("dup_index")
+    else:
+        idx = request.getfixturevalue(f"index_{which}")
+        pts = request.getfixturevalue(f"points_{which}")
+    queries = _adversarial_queries()
+    k = 10
+    cap = K.DRIVER_CELLS_MAX_QUERIES if loop == "driver" else -1
+    with mock.patch.object(K, "DRIVER_CELLS_MAX_QUERIES", cap):
+        res, st = knn(idx, queries, k=k, return_stats=True)
+        got = res.toPandas().sort_values(["qid", "rn"])
+        stats = st.toPandas()
+    assert len(stats) == len(queries)
+    assert stats["rounds"].max() <= 2, stats.sort_values("rounds").tail()
+    got_d2 = {int(q): g["dist2"].tolist() for q, g in got.groupby("qid")}
+    assert got_d2 == _dist2_lists(pts, queries, k)
+
+
+def test_knn_handoff_equivalence(spark, cfg, index_varden):
+    """A distributed batch whose pending tail fits DRIVER_CELLS_MAX_QUERIES
+    hands it to the driver loop: round 1 runs distributed, round 2 on the
+    driver. Rows and per-query (rounds, cand_rows) equal both the pure
+    driver run and the pure distributed run."""
+    import unittest.mock as mock
+
+    import pkd_tree_spark.knn as K
+
+    queries = _adversarial_queries()
+
+    def run():
+        res, st = knn(index_varden, queries, k=10, return_stats=True)
+        return _sorted(res), st.toPandas().sort_values("qid").reset_index(drop=True)
+
+    a, sa = run()
+    pending_after_r1 = int((sa["rounds"] >= 2).sum())
+    assert 0 < pending_after_r1 < len(queries)
+    with mock.patch.object(K, "DRIVER_CELLS_MAX_QUERIES", -1):
+        b, sb = run()
+    with mock.patch.object(K, "DRIVER_CELLS_MAX_QUERIES", pending_after_r1), mock.patch.object(
+        K, "_knn_driver", wraps=K._knn_driver
+    ) as drv:
+        c, sc = run()
+    assert drv.call_count == 1 and drv.call_args.kwargs["first_round"] == 2
+    for rows, stats in ((b, sb), (c, sc)):
+        pd.testing.assert_frame_equal(rows, a)
+        pd.testing.assert_frame_equal(stats, sa)
+
+
+def test_knn_distributed_releases_broadcasts(spark, index_varden):
+    """The distributed loop's skeleton broadcast is destroyed once the
+    round loop ends (its consumers all run inside eager checkpoints), and
+    the returned result still evaluates afterwards."""
+    import unittest.mock as mock
+
+    import pkd_tree_spark.knn as K
+
+    sc = spark.sparkContext
+    made = []
+    real = sc.broadcast
+
+    def spy(value):
+        bc = real(value)
+        made.append(bc)
+        return bc
+
+    with mock.patch.object(K, "DRIVER_CELLS_MAX_QUERIES", -1), mock.patch.object(sc, "broadcast", spy):
+        res = knn(index_varden, FX.knn_fixtures(16, 2), k=5)
+    assert made, "the distributed loop should broadcast the skeleton"
+    assert not any(bc._jbroadcast.isValid() for bc in made)
+    assert res.count() == 16 * 5
